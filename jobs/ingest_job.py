@@ -9,6 +9,7 @@ script is the driver program. Example (what tools/run_submit.sh does):
         --master local[8] \
         --py-files dist/osm_pbf_spark.zip \
         jobs/ingest_job.py --pbf <file.pbf> --table <dir> [--cell-level 12]
+            [--blobs-per-split N]
 
 The job runs decode -> doc render -> cell index -> Iceberg-shaped sink,
 then a PIP join + tile rollup over the ingested table, and prints one
@@ -32,7 +33,9 @@ def main() -> None:
     p.add_argument("--pbf", required=True)
     p.add_argument("--table", required=True)
     p.add_argument("--cell-level", type=int, default=12)
-    p.add_argument("--blobs-per-split", type=int, default=1_000_000)
+    # blobs per committed split (default: ingest_pbf's); a killed run
+    # resumes at the first uncommitted split
+    p.add_argument("--blobs-per-split", type=int, default=None)
     args = p.parse_args()
 
     # Imports resolve from the --py-files zip (or a dev checkout).
@@ -42,13 +45,8 @@ def main() -> None:
 
     spark = SparkSession.builder.appName("osm-pbf-ingest").getOrCreate()
     t0 = time.monotonic()
-    ingest_pbf(
-        spark,
-        args.pbf,
-        args.table,
-        cell_level=args.cell_level,
-        blobs_per_split=args.blobs_per_split,
-    )
+    split_kw = {} if args.blobs_per_split is None else {"blobs_per_split": args.blobs_per_split}
+    ingest_pbf(spark, args.pbf, args.table, cell_level=args.cell_level, **split_kw)
     docs = read_documents(spark, args.table).select("doc_id", "lat", "lon")
     n_docs = docs.count()
 

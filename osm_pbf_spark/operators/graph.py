@@ -2135,11 +2135,11 @@ def scc(
     (the Orzan / FW-BW-MIN family — the standard distributed SCC):
 
       1. forward min-label to fixpoint: f(v) = min id forward-
-         reachable from v (including v);
+         reachable from v (including v), so f(v) == c means v reaches c;
       2. every color-class leader c (f(c) == c) anchors one SCC:
-         SCC(c) = {v : f(v) == c and v reaches c} — and any v -> c
+         SCC(c) = {v : f(v) == c and c reaches v} — and any c -> v
          path stays inside the color class (proved in-line below), so
-         the backward closure runs on SAME-COLOR edges only;
+         the closure from the leader runs on SAME-COLOR edges only;
       3. decided nodes peel off; repeat on the residual graph.
 
     Each peel removes every leader SCC, so outer iterations are few in
@@ -2197,10 +2197,10 @@ def scc(
             f = upd.select("node", "f")
             if n_chg == 0:
                 break
-        # 2) backward closure of each leader inside its color class:
-        #    any v->..->c path with f(v)==c stays in color c, because
-        #    reachable(w) ⊆ reachable(v) gives f(w) >= f(v) = c while
-        #    c ∈ reachable(w) gives f(w) <= c.
+        # 2) forward closure of each leader inside its color class:
+        #    any c->..->w->..->v path with f(v)==c stays in color c,
+        #    because reachable(w) ⊆ reachable(c) gives f(w) >= f(c) = c
+        #    while w reaches v, which reaches c, gives f(w) <= c.
         ce = (
             alive_e.join(f.withColumnRenamed("node", "a").withColumnRenamed("f", "_fa"), "a")
             .join(f.withColumnRenamed("node", "b").withColumnRenamed("f", "_fb"), "b")
@@ -2214,8 +2214,8 @@ def scc(
         while True:
             tick()
             nxt = (
-                ce.join(reach.withColumnRenamed("node", "b"), "b")
-                .select(F.col("a").alias("node"))
+                ce.join(reach.withColumnRenamed("node", "a"), "a")
+                .select(F.col("b").alias("node"))
                 .distinct()
                 .join(reach, "node", "left_anti")
                 .localCheckpoint(eager=True)

@@ -27,6 +27,8 @@ Engine-independence contract (what makes these DuckDB-gateable):
 
 from __future__ import annotations
 
+import math
+
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -49,6 +51,10 @@ __all__ = [
 
 DEG2RAD = 0.017453292519943295  # closest float64 to pi/180 — keep literal
 EARTH_RADIUS_M = 6371008.8
+# densify_route refuses legs longer than pi/2 with sin(d) below this:
+# the haversine d loses half its digits near pi, and the slerp error on
+# the 1e-7-degree output grid passes one unit near sin(d) ~ 2e-4
+ANTIPODAL_SIN_EPS = 1e-3
 
 
 def _hav_m(lat0, lon0, lat1, lon1):
@@ -707,7 +713,11 @@ def densify_route(
     rationals i/(n_points+1); outputs are integer 1e-7-degree units
     (the destination_point rounding contract — cross-engine trig
     drift absorbed). Zero-length legs (d below 1e-12 rad) emit the
-    start point at every fraction (slerp is 0/0 there).
+    start point at every fraction (slerp is 0/0 there). Near-antipodal
+    legs (d above pi/2 with sin(d) below ``ANTIPODAL_SIN_EPS``, i.e.
+    ends within ~6 km of antipodes) RAISE: the great circle through
+    near-antipodes is ill-conditioned and the haversine d loses half
+    its digits near pi, so slerp there returns wrong points or NaN.
 
     Plan: one native Generate (sequence explode) + a pure-codegen trig
     chain — map-only. Returns legs.* + (seq, lat_e7, lon_e7), seq
@@ -738,13 +748,23 @@ def densify_route(
     plat = F.atan2(z, F.sqrt(x * x + y * y)) * F.lit(1.0 / DEG2RAD)
     plon = F.atan2(y, x) * F.lit(1.0 / DEG2RAD)
     degenerate = dd < F.lit(1e-12)
+    antipodal = (dd > F.lit(math.pi / 2)) & (F.sin(dd) < F.lit(ANTIPODAL_SIN_EPS))
+    fail = F.raise_error(
+        F.format_string(
+            "densify_route: near-antipodal leg (%s, %s) -> (%s, %s) has no "
+            "well-defined great circle",
+            F.col(lat1), F.col(lon1), F.col(lat2), F.col(lon2),
+        )
+    )
     return out.select(
         *legs.columns,
         "seq",
         F.round(
-            F.when(degenerate, F.col(lat1)).otherwise(plat) * F.lit(1e7)
+            F.when(antipodal, fail).when(degenerate, F.col(lat1)).otherwise(plat)
+            * F.lit(1e7)
         ).cast("long").alias("lat_e7"),
         F.round(
-            F.when(degenerate, F.col(lon1)).otherwise(plon) * F.lit(1e7)
+            F.when(antipodal, fail).when(degenerate, F.col(lon1)).otherwise(plon)
+            * F.lit(1e7)
         ).cast("long").alias("lon_e7"),
     )

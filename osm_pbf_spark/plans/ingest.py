@@ -7,13 +7,18 @@ resumes from the last committed split (BASELINE.json:6,14).
 Splits are contiguous BLOB RANGES of the input file: lineage for each
 split records exactly which byte ranges produced it (C3). At planet
 scale a split is O(hundreds) of blobs; here fixtures use small splits
-to exercise the protocol.
+to exercise the protocol. The sorted layout runs consecutive splits in
+WAVES, one Spark job each, so the split size sets the commit (and
+resume) granularity, not the task count.
 """
 
 from __future__ import annotations
 
 import hashlib
+import heapq
 import os
+import shutil
+import time
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -23,7 +28,7 @@ from ..sink.iceberg_like import IcebergLikeSink
 from ..sources.pbf_source import (
     FILE_REPORT_SPARK_SCHEMA,
     _decode_render_partition_factory,
-    _decode_render_write_partition_factory,
+    _decode_render_write_bins_factory,
     _doc_cell_schemas,
 )
 
@@ -39,31 +44,95 @@ def _file_sha256(path: str, max_bytes: int = 1 << 24) -> str:
     return h.hexdigest()
 
 
+def _plan_waves(splits: list, wave_blobs: int) -> list[list]:
+    """Group consecutive splits into waves; a wave closes once it holds
+    at least ``wave_blobs`` blobs."""
+    waves, cur, n = [], [], 0
+    for split in splits:
+        cur.append(split)
+        n += len(split[1])
+        if n >= wave_blobs:
+            waves.append(cur)
+            cur, n = [], 0
+    if cur:
+        waves.append(cur)
+    return waves
+
+
+def _lpt(items: list, weight, n: int) -> list[tuple[int, list]]:
+    """Largest-first into the lightest of ``n`` groups ->
+    ``(weight, members)`` per group."""
+    heap = [(0, j) for j in range(n)]
+    members: list[list] = [[] for _ in range(n)]
+    for it in sorted(items, key=lambda it: -weight(it)):
+        load, j = heapq.heappop(heap)
+        members[j].append(it)
+        heapq.heappush(heap, (load + weight(it), j))
+    loads = {j: load for load, j in heap}
+    return [(loads[j], members[j]) for j in range(n)]
+
+
+def _plan_tasks(wave: list, n_tasks: int) -> list[list[tuple]]:
+    """Bin a wave's blobs by compressed size and group the bins into at
+    most ``n_tasks`` tasks.
+
+    Each split gets bins in proportion to its bytes (at least one, at
+    most one per blob) and never shares a bin with another split; its
+    blobs go largest first into the lightest bin, and each bin becomes
+    one data file. Bins then go largest first into the lightest task,
+    so a wave of many small splits still runs one task per core.
+    Returns tasks heaviest first, each a list of ``(split_id, refs)``
+    bins with refs in file order."""
+    total = sum(r.size for _, refs in wave for r in refs) or 1
+    bins = []
+    for sid, refs in wave:
+        k = min(len(refs), max(1, round(n_tasks * sum(r.size for r in refs) / total)))
+        bins += [
+            (load, (sid, sorted(members, key=lambda r: r.offset)))
+            for load, members in _lpt(refs, lambda r: r.size, k)
+        ]
+    tasks = _lpt(bins, lambda b: b[0], min(len(bins), n_tasks))
+    tasks.sort(key=lambda t: -t[0])
+    return [[b for _, b in members] for _, members in tasks]
+
+
 def ingest_pbf(
     spark: SparkSession,
     pbf_path: str,
     table_root: str,
     cell_level: int = 12,
     blobs_per_split: int = 2,
-    parallelism: int | None = None,
     fail_before_split: str | None = None,
     layout: str = "sorted",
 ) -> IcebergLikeSink:
     """Run (or RESUME) the ingest. Returns the sink for reading.
 
-    ``fail_before_split`` injects a crash before that split's manifest
-    commit — used by the kill/resume test.
+    The file's data blobs form splits of ``blobs_per_split``
+    consecutive blobs; each split commits its own manifest, so a killed
+    run resumes at the first uncommitted split. ``fail_before_split``
+    injects a crash before that split's manifest commit — used by the
+    kill/resume test.
 
     ``layout``:
-      - "sorted" (default): each decode task sorts its docs by cell in
-        Arrow before the write — NO shuffle anywhere in the ingest;
-        pruning comes from tight per-file/row-group [cell_min, cell_max]
-        metrics recorded in the manifest (Iceberg-style). At 60M docs
-        the partitionBy shuffle of nested span rows cost ~12x the
-        parquet write itself — this layout removes it.
+      - "sorted" (default): consecutive pending splits are grouped into
+        WAVES of at least 4 x defaultParallelism blobs, and each wave
+        is ONE Spark job with NO shuffle. The driver bins every split's
+        blobs by compressed size (a bin never crosses a split; a wave
+        gets ~defaultParallelism bins, or one per split if it has more
+        splits than that) and groups the bins by size into at most
+        defaultParallelism tasks. For each bin a task decodes, renders,
+        cells, sorts the docs by cell in Arrow and writes one parquet
+        file into the split's data directory. After the job the driver
+        commits the wave's splits in split order, so a kill loses at
+        most one wave of work and the task count comes from blob bytes
+        and cores, not from ``blobs_per_split``. Pruning comes
+        from tight per-file/row-group [cell_min, cell_max] metrics
+        recorded in the manifest (Iceberg-style). At 60M docs the
+        partitionBy shuffle of nested span rows cost ~12x the parquet
+        write itself — this layout removes it.
       - "partitioned": hive-style cell_prefix directories via an AQE
-        REBALANCE shuffle (skew-splitting, bounded files/dir) — for
-        consumers that need directory layout.
+        REBALANCE shuffle (skew-splitting, bounded files/dir), one Spark
+        job per split — for consumers that need directory layout.
     """
     refs = scan_blobs(pbf_path)
     header = None
@@ -85,31 +154,10 @@ def ingest_pbf(
     )
     file_sha = _file_sha256(pbf_path)
     todo = set(sink.resume_plan([sid for sid, _ in splits]))
-
-    from pyspark.sql import functions as F
-
-    for sid, split_refs in splits:
-        if sid not in todo:
-            continue
-        manifest_df = spark.createDataFrame(
-            [(pbf_path, r.seq, r.offset, r.size) for r in split_refs],
-            schema="path string, seq long, offset long, size long",
-        )
-        # 4 task waves per split: the sorted layout's per-task sort is a
-        # barrier between the Python kernel and the JVM write, so
-        # smaller staggered tasks let wave N's write overlap wave N+1's
-        # decode (and bound the per-task Arrow accumulation)
-        n = parallelism or min(
-            len(split_refs), 4 * spark.sparkContext.defaultParallelism
-        ) or 1
-        # fused decode -> span render -> Morton cell in ONE mapInArrow
-        # pass: entity data crosses the Arrow boundary exactly once
-        # (two chained stages would materialize + re-serialize the whole
-        # batch as JVM rows in between — measured ~8x the decode cost).
-        # cell_prefix (parent cell at level 4) is the directory-pruning
-        # partition column; cell/cell_prefix are -1 for docs with no
-        # point geometry (ways/relations before geometry assembly).
-        lineage = {
+    pending = [(sid, split_refs) for sid, split_refs in splits if sid in todo]
+    # lineage for each split records exactly which byte ranges produced it
+    lineage = {
+        sid: {
             "input_file": os.path.abspath(pbf_path),
             "input_sha256": file_sha,
             "blob_seqs": [r.seq for r in split_refs],
@@ -117,52 +165,93 @@ def ingest_pbf(
             "cell_level": cell_level,
             "header_required_features": (header or {}).get("required_features", []),
         }
-        if layout == "sorted":
-            # workers write their cell-sorted chunks DIRECTLY with
-            # pyarrow and return one file-report row each; the span
-            # rows never become JVM rows at all. Visibility comes from
-            # the manifest commit, not from the write. (On a cluster,
-            # data_dir is shared storage — pyarrow writes via fsspec.)
-            import shutil
-            import time as _time
-
-            data_dir = os.path.join(table_root, "data", f"split={sid}")
-            # the split is NOT committed (it is in the todo set), so
-            # nothing under its data dir is visible to readers — wipe
-            # orphans from failed attempts before re-running, keeping
-            # the "a resumed split overwrites its data dir before
-            # committing" invariant true and disk usage bounded
-            shutil.rmtree(data_dir, ignore_errors=True)
-            os.makedirs(data_dir, exist_ok=True)
-            t0 = _time.monotonic()
-            reports = (
-                manifest_df.repartition(n)
-                .mapInArrow(
-                    _decode_render_write_partition_factory(cell_level, data_dir),
-                    FILE_REPORT_SPARK_SCHEMA,
-                )
-                .collect()
+        for sid, split_refs in pending
+    }
+    par = spark.sparkContext.defaultParallelism
+    if layout == "sorted":
+        for wave in _plan_waves(pending, 4 * par):
+            _ingest_wave(
+                spark, sink, pbf_path, table_root, wave, cell_level, par, lineage,
+                fail_before_split,
             )
-            sink.commit_reported_split(
-                sid,
-                [r.asDict() for r in reports],
-                lineage=lineage,
-                fail_before_commit=(sid == fail_before_split),
-                wall_s=_time.monotonic() - t0,
+    else:
+        _, doc_cell_schema = _doc_cell_schemas()
+        for sid, split_refs in pending:
+            manifest_df = spark.createDataFrame(
+                [(pbf_path, r.seq, r.offset, r.size) for r in split_refs],
+                schema="path string, seq long, offset long, size long",
             )
-        else:
-            _, doc_cell_schema = _doc_cell_schemas()
-            docs = manifest_df.repartition(n).mapInArrow(
+            # fused decode -> span render -> Morton cell in ONE
+            # mapInArrow pass: entity data crosses the Arrow boundary
+            # exactly once. cell_prefix (parent cell at level 4) is the
+            # directory-pruning partition column; cell/cell_prefix are
+            # -1 for docs with no point geometry (ways/relations before
+            # geometry assembly).
+            docs = manifest_df.repartition(min(len(split_refs), 4 * par)).mapInArrow(
                 _decode_render_partition_factory(cell_level), doc_cell_schema
             )
             sink.write_split(
                 docs,
                 sid,
-                lineage=lineage,
+                lineage=lineage[sid],
                 fail_before_commit=(sid == fail_before_split),
             )
     sink.commit_snapshot({"pipeline": "ingest_pbf", "cell_level": str(cell_level)})
     return sink
+
+
+def _ingest_wave(
+    spark: SparkSession,
+    sink: IcebergLikeSink,
+    pbf_path: str,
+    table_root: str,
+    wave: list,
+    cell_level: int,
+    n_tasks: int,
+    lineage: dict,
+    fail_before_split: str | None,
+) -> None:
+    """One wave of the sorted layout: ONE shuffle-free Spark job, then
+    the driver commits the wave's splits in split order."""
+    for sid, _ in wave:
+        # the split is NOT committed (it is pending), so nothing under
+        # its data dir is visible to readers — wipe orphans from failed
+        # attempts before re-running, keeping the "a resumed split
+        # overwrites its data dir before committing" invariant true and
+        # disk usage bounded
+        data_dir = os.path.join(table_root, "data", f"split={sid}")
+        shutil.rmtree(data_dir, ignore_errors=True)
+        os.makedirs(data_dir, exist_ok=True)
+    tasks = [
+        [(sid, pbf_path, [r.offset for r in refs], [r.size for r in refs]) for sid, refs in task]
+        for task in _plan_tasks(wave, n_tasks)
+    ]
+    # the task list ships with the kernel; a JVM range of task indexes
+    # with one partition per task needs no repartition shuffle and no
+    # Python row conversion in front of the kernel. Each Python task
+    # has a fixed start-up cost, so a wave runs at most one task per
+    # core. Workers write their cell-sorted files DIRECTLY with pyarrow
+    # and return one file-report row per bin; the span rows never
+    # become JVM rows at all. Visibility comes from the manifest
+    # commit, not from the write. (On a cluster, table_root is shared
+    # storage — pyarrow writes via fsspec.)
+    t0 = time.monotonic()
+    reports = spark.range(0, len(tasks), 1, len(tasks)).mapInArrow(
+        _decode_render_write_bins_factory(cell_level, table_root, tasks),
+        FILE_REPORT_SPARK_SCHEMA,
+    ).collect()
+    wall_s = time.monotonic() - t0
+    by_split: dict[str, list[dict]] = {sid: [] for sid, _ in wave}
+    for r in reports:
+        by_split[r["split_id"]].append(r.asDict())
+    for sid, _ in wave:
+        sink.commit_reported_split(
+            sid,
+            by_split[sid],
+            lineage=lineage[sid],
+            fail_before_commit=(sid == fail_before_split),
+            wall_s=wall_s,  # the wave's job time, shared by its splits
+        )
 
 
 def read_documents(

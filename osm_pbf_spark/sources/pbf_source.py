@@ -196,7 +196,8 @@ def _decode_render_partition_factory(
         # ranges: Iceberg-style metrics pruning with NO shuffle — at 60M
         # docs the rebalance+partitionBy shuffle of nested span rows
         # cost ~12x the parquet write itself. Task memory is bounded by
-        # the split size (blobs_per_split), not the table.
+        # the task's blobs (one ingest bin, at most one split), not the
+        # table.
         acc = [_cell_batch(ent) for ent in _decode_partition(batches)]
         if not acc:
             return
@@ -664,6 +665,7 @@ def validate_multipolygons(
 
 FILE_REPORT_SPARK_SCHEMA = T.StructType(
     [
+        T.StructField("split_id", T.StringType()),
         T.StructField("path", T.StringType()),
         T.StructField("n_rows", T.LongType()),
         T.StructField("n_bytes", T.LongType()),
@@ -672,49 +674,74 @@ FILE_REPORT_SPARK_SCHEMA = T.StructType(
     ]
 )
 
-
-def _decode_render_write_partition_factory(
-    cell_level: int, data_dir: str, prefix_level: int = 4, rows_per_group: int = 65536
+def _decode_render_write_bins_factory(
+    cell_level: int,
+    table_root: str,
+    tasks: list[list[tuple[str, str, list[int], list[int]]]],
+    prefix_level: int = 4,
+    rows_per_group: int = 65536,
 ):
-    """Fused decode -> render -> cell -> SORT -> direct parquet write.
+    """Fused decode -> render -> cell -> SORT -> direct parquet write,
+    one data file per BIN: a ``(split_id, path, offsets, sizes)`` group
+    of one split's blobs. The kernel's input rows are task indexes into
+    ``tasks`` (column ``id``, as ``spark.range`` yields them), each
+    task a list of bins.
 
-    The worker writes its cell-sorted chunk with pyarrow and returns
-    only a one-row FILE REPORT (path, rows, bytes, cell min/max) to
-    Spark. The Arrow->InternalRow conversion and JVM parquet encode of
-    the nested span rows — the largest non-kernel cost of the ingest —
-    never happen; the sink's manifest protocol (not Hadoop's committer)
-    is what makes files visible, so a failed/duplicate task attempt
-    just leaves an invisible orphan file.
+    Each bin's blobs are decoded together, sorted by cell and written
+    with pyarrow into its split's ``data/split=<split_id>`` directory;
+    the task returns only a one-row FILE REPORT per bin (split id,
+    path, rows, bytes, cell min/max) to Spark. The Arrow->InternalRow
+    conversion and JVM parquet encode of the nested span rows — the
+    largest non-kernel cost of the ingest — never happen; the sink's
+    manifest protocol (not Hadoop's committer) is what makes files
+    visible, so a failed/duplicate task attempt just leaves an
+    invisible orphan file.
     """
     import os
     import uuid
 
+    import pyarrow.compute as pc
     import pyarrow.parquet as pq
 
     sorted_kernel = _decode_render_partition_factory(
         cell_level, prefix_level, sort_by_cell=True
     )
 
-    def _fused_write(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        out = list(sorted_kernel(batches))
-        if not out:
-            return
-        tab = pa.Table.from_batches(out)
-        path = os.path.join(data_dir, f"part-{uuid.uuid4().hex}.parquet")
-        pq.write_table(tab, path, row_group_size=rows_per_group, compression="snappy")
-        cells = tab.column("cell")
-        import pyarrow.compute as pc
-
-        mm = pc.min_max(cells).as_py()
-        yield pa.record_batch(
+    def _write_bin(split_id, path, offsets, sizes) -> pa.RecordBatch | None:
+        blobs = pa.record_batch(
             {
-                "path": pa.array([path]),
+                "path": pa.array([path] * len(offsets)),
+                "offset": pa.array(offsets, pa.int64()),
+                "size": pa.array(sizes, pa.int64()),
+            }
+        )
+        out = list(sorted_kernel(iter([blobs])))
+        if not out:
+            return None
+        tab = pa.Table.from_batches(out)
+        fpath = os.path.join(
+            table_root, "data", f"split={split_id}", f"part-{uuid.uuid4().hex}.parquet"
+        )
+        pq.write_table(tab, fpath, row_group_size=rows_per_group, compression="snappy")
+        mm = pc.min_max(tab.column("cell")).as_py()
+        return pa.record_batch(
+            {
+                "split_id": pa.array([split_id]),
+                "path": pa.array([fpath]),
                 "n_rows": pa.array([tab.num_rows], pa.int64()),
-                "n_bytes": pa.array([os.path.getsize(path)], pa.int64()),
+                "n_bytes": pa.array([os.path.getsize(fpath)], pa.int64()),
                 "cell_min": pa.array([mm["min"]], pa.int64()),
                 "cell_max": pa.array([mm["max"]], pa.int64()),
             }
         )
+
+    def _fused_write(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch in batches:
+            for i in batch.column("id").to_pylist():
+                for b in tasks[i]:
+                    report = _write_bin(*b)
+                    if report is not None:
+                        yield report
 
     return _fused_write
 

@@ -154,6 +154,17 @@ def test_scc_matches_tarjan(spark):
     assert got[10] == got[11] == 10
 
 
+def test_scc_chain_into_min_id_is_singletons(spark):
+    """3->2->1: every node reaches the min id 1 (one forward color), but
+    1 reaches nothing, so the SCCs are three singletons."""
+    from osm_pbf_spark.operators.graph import scc
+
+    edges = [(3, 2), (2, 1)]
+    df = spark.createDataFrame(edges, "src long, dst long")
+    got = {r.node: r.comp for r in scc(df).collect()}
+    assert got == _tarjan(edges) == {1: 1, 2: 2, 3: 3}
+
+
 def test_scc_synthetic_mixed(spark):
     from osm_pbf_spark.operators.graph import scc
 

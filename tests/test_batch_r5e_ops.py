@@ -107,3 +107,44 @@ def test_densify_route_great_circle_bulge(spark):
     assert abs(got[2][1]) < 1e-6          # midpoint on the central meridian
     assert got[2][0] > 61.5               # bulges well above 60N (~62.8)
     assert abs(got[1][0] - got[3][0]) < 1e-6  # symmetric
+
+
+def _slerp_vec(la1, lo1, la2, lo2, f):
+    """Reference slerp in 3-vector form, d = atan2(|AxB|, A.B) — well
+    conditioned near antipodes, unlike the engine's haversine d."""
+    def vec(la, lo):
+        la, lo = math.radians(la), math.radians(lo)
+        return (math.cos(la) * math.cos(lo), math.cos(la) * math.sin(lo), math.sin(la))
+
+    a, b = vec(la1, lo1), vec(la2, lo2)
+    cr = (a[1] * b[2] - a[2] * b[1], a[2] * b[0] - a[0] * b[2], a[0] * b[1] - a[1] * b[0])
+    d = math.atan2(math.sqrt(sum(c * c for c in cr)), sum(p * q for p, q in zip(a, b)))
+    wa, wb = math.sin((1 - f) * d) / math.sin(d), math.sin(f * d) / math.sin(d)
+    x, y, z = (wa * p + wb * q for p, q in zip(a, b))
+    return math.degrees(math.atan2(z, math.hypot(x, y))), math.degrees(math.atan2(y, x))
+
+
+def test_densify_route_near_antipodal_raises(spark):
+    """Legs whose ends are (nearly) antipodal have no well-defined great
+    circle: slerp divided by sin(d) ~ 0 and returned NaN, which the long
+    cast turned into silent (0, 0) points. They now fail loudly, while a
+    long leg just outside the guard still densifies accurately."""
+    import pytest
+    from pyspark.errors import PySparkException
+    from py4j.protocol import Py4JJavaError
+
+    from osm_pbf_spark.operators.measures import densify_route
+
+    schema = "leg long, lat1 double, lon1 double, lat2 double, lon2 double"
+    for leg in [(1, 10.0, 20.0, -10.0, -160.0), (2, 10.0, 20.0, -9.9999, -160.0)]:
+        legs = spark.createDataFrame([leg], schema)
+        with pytest.raises((PySparkException, Py4JJavaError), match="near-antipodal"):
+            densify_route(legs, n_points=3).collect()
+
+    leg = (3, 10.0, 20.0, -9.5, -160.0)
+    got = {r.seq: (r.lat_e7, r.lon_e7)
+           for r in densify_route(spark.createDataFrame([leg], schema), n_points=3).collect()}
+    for seq in (1, 2, 3):
+        want_lat, want_lon = _slerp_vec(*leg[1:], seq / 4)
+        assert abs(got[seq][0] - want_lat * 1e7) <= 1
+        assert abs(got[seq][1] - want_lon * 1e7) <= 1
