@@ -46,9 +46,7 @@ def main() -> None:
 
     spark = SparkSession.builder.appName("osm-pbf-export").getOrCreate()
     t0 = time.monotonic()
-    ents, header = src.read_pbf(
-        spark, args.pbf if len(args.pbf) > 1 else args.pbf[0]
-    )
+    ents, header = src.read_pbf(spark, args.pbf)
     clipped = ents.where(
         (F.col("kind") != "node")
         | (

@@ -15,21 +15,20 @@ resume) granularity, not the task count.
 from __future__ import annotations
 
 import hashlib
-import heapq
 import os
 import shutil
 import time
 
 from pyspark.sql import DataFrame, SparkSession
 
-from ..pbf.decode import decode_header_block
-from ..pbf.framing import read_blob_payload, scan_blobs
 from ..sink.iceberg_like import IcebergLikeSink
 from ..sources.pbf_source import (
     FILE_REPORT_SPARK_SCHEMA,
     _decode_render_partition_factory,
     _decode_render_write_bins_factory,
     _doc_cell_schemas,
+    _lpt,
+    _scan_one,
 )
 
 
@@ -57,19 +56,6 @@ def _plan_waves(splits: list, wave_blobs: int) -> list[list]:
     if cur:
         waves.append(cur)
     return waves
-
-
-def _lpt(items: list, weight, n: int) -> list[tuple[int, list]]:
-    """Largest-first into the lightest of ``n`` groups ->
-    ``(weight, members)`` per group."""
-    heap = [(0, j) for j in range(n)]
-    members: list[list] = [[] for _ in range(n)]
-    for it in sorted(items, key=lambda it: -weight(it)):
-        load, j = heapq.heappop(heap)
-        members[j].append(it)
-        heapq.heappush(heap, (load + weight(it), j))
-    loads = {j: load for load, j in heap}
-    return [(loads[j], members[j]) for j in range(n)]
 
 
 def _plan_tasks(wave: list, n_tasks: int) -> list[list[tuple]]:
@@ -134,15 +120,7 @@ def ingest_pbf(
         REBALANCE shuffle (skew-splitting, bounded files/dir), one Spark
         job per split — for consumers that need directory layout.
     """
-    refs = scan_blobs(pbf_path)
-    header = None
-    data_refs = []
-    for r in refs:
-        if r.blob_type == "OSMHeader":
-            header = decode_header_block(read_blob_payload(pbf_path, r.offset, r.size))
-        elif r.blob_type == "OSMData":
-            data_refs.append(r)
-
+    header, data_refs = _scan_one(pbf_path)
     splits = [
         (f"{i:06d}", data_refs[i : i + blobs_per_split])
         for i in range(0, len(data_refs), blobs_per_split)
@@ -163,7 +141,7 @@ def ingest_pbf(
             "blob_seqs": [r.seq for r in split_refs],
             "byte_range": [split_refs[0].offset, split_refs[-1].offset + split_refs[-1].size],
             "cell_level": cell_level,
-            "header_required_features": (header or {}).get("required_features", []),
+            "header_required_features": header["required_features"],
         }
         for sid, split_refs in pending
     }

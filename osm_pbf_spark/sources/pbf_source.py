@@ -7,9 +7,12 @@ becomes an arbitrarily parallel scan:
    seeking past payloads -> blob manifest (seq, offset, size);
 2. decode + validate the OSMHeader once on the driver (fail fast on
    unsupported required_features — spec semantics);
-3. manifest -> small DataFrame -> ``repartition(n)`` -> ``mapInArrow``
-   UDF re-opens the file per partition and reads ONLY its byte ranges,
-   running the vectorized numpy decode kernels per blob.
+3. bin the blobs by compressed size into decode tasks (by default one
+   per core); ``spark.range(n)`` -> ``mapInArrow`` runs one Spark task
+   per bin (the bin list ships in the kernel closure: no manifest
+   DataFrame, no repartition), and each task opens the file and reads
+   ONLY its byte ranges, running the vectorized numpy decode kernels
+   per blob.
 
 The decode emits ONE unified entity schema (kind + nullable
 refs/members) so the file is read and decoded exactly once; ``nodes()``
@@ -20,6 +23,7 @@ file — no shuffle anywhere in the decode stage.
 
 from __future__ import annotations
 
+import heapq
 from collections.abc import Iterator
 
 import pyarrow as pa
@@ -746,18 +750,76 @@ def _decode_render_write_bins_factory(
     return _fused_write
 
 
-def _scan_one(p: str) -> tuple[dict, list[tuple]]:
-    """Header-only scan of one file -> (header dict, manifest rows)."""
+def _lpt(items: list, weight, n: int) -> list[tuple[int, list]]:
+    """Largest-first into the lightest of ``n`` groups ->
+    ``(weight, members)`` per group."""
+    heap = [(0, j) for j in range(n)]
+    members: list[list] = [[] for _ in range(n)]
+    for it in sorted(items, key=lambda it: -weight(it)):
+        load, j = heapq.heappop(heap)
+        members[j].append(it)
+        heapq.heappush(heap, (load + weight(it), j))
+    loads = {j: load for load, j in heap}
+    return [(loads[j], members[j]) for j in range(n)]
+
+
+def _scan_one(p: str) -> tuple[dict, list]:
+    """Header-only scan of one file -> (header dict, OSMData blob refs).
+    Unknown blob types are skipped per spec ("parsers should ignore")."""
     header = None
-    rows = []
+    refs = []
     for r in scan_blobs(p):
         if r.blob_type == "OSMHeader":
             header = decode_header_block(read_blob_payload(p, r.offset, r.size))
         elif r.blob_type == "OSMData":
-            rows.append((p, r.seq, r.offset, r.size))
+            refs.append(r)
     if header is None:
         header = {"required_features": [], "optional_features": [], "bbox": None}
-    return header, rows
+    return header, refs
+
+
+def _merge_header(merged: dict, h: dict) -> None:
+    """Fold one more file's header into ``merged``: feature lists
+    unioned in first-seen order, bbox the envelope union."""
+    for key in ("required_features", "optional_features"):
+        for feat in h.get(key, []):
+            if feat not in merged[key]:
+                merged[key].append(feat)
+    bb = h.get("bbox")
+    if bb is not None:
+        mb = merged["bbox"]
+        merged["bbox"] = (
+            dict(bb)
+            if mb is None
+            else {
+                "left": min(mb["left"], bb["left"]),
+                "right": max(mb["right"], bb["right"]),
+                "bottom": min(mb["bottom"], bb["bottom"]),
+                "top": max(mb["top"], bb["top"]),
+            }
+        )
+
+
+def _decode_tasks_factory(paths: list[str], tasks: list[list[tuple[int, int, int]]]):
+    """Decode kernel over task indexes (column ``id``, as ``spark.range``
+    yields them): task ``i`` decodes the blobs ``tasks[i]``, each a
+    ``(file index into paths, offset, size)`` in file order, through
+    ``_decode_partition``."""
+
+    def _decode_tasks(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch in batches:
+            for i in batch.column("id").to_pylist():
+                blobs = tasks[i]
+                manifest = pa.record_batch(
+                    {
+                        "path": pa.array([paths[k] for k, _, _ in blobs], pa.string()),
+                        "offset": pa.array([off for _, off, _ in blobs], pa.int64()),
+                        "size": pa.array([size for _, _, size in blobs], pa.int64()),
+                    }
+                )
+                yield from _decode_partition(iter([manifest]))
+
+    return _decode_tasks
 
 
 def read_pbf(
@@ -767,69 +829,40 @@ def read_pbf(
 ) -> tuple[DataFrame, dict]:
     """Distributed decode -> (unified entity DataFrame, header dict).
 
-    ``path`` may be a LIST of .pbf files (a planet split into regional
-    extracts): each file gets its own driver-light header scan, the
-    blob manifests union, and ONE decode stage reads every file's byte
-    ranges in parallel (the manifest already carries a per-row path).
-    The returned header is then the MERGE: feature lists unioned
-    (first-seen order), bbox the envelope union. Entities appearing in
-    several extracts (overlapping clips) are NOT deduplicated — ids
-    are global, so a plain dropDuplicates('kind','id') downstream is
-    exact. Single-path calls are byte-for-byte the old behavior.
-    """
-    if not isinstance(path, str):
-        paths = list(path)
-        if not paths:
-            raise ValueError("read_pbf: empty path list")
-        merged: dict = {"required_features": [], "optional_features": [], "bbox": None}
-        all_rows = []
-        for p in paths:
-            ents_header = _scan_one(p)
-            h, rows = ents_header
-            for key in ("required_features", "optional_features"):
-                for feat in h.get(key, []):
-                    if feat not in merged[key]:
-                        merged[key].append(feat)
-            bb = h.get("bbox")
-            if bb is not None:
-                mb = merged["bbox"]
-                merged["bbox"] = (
-                    dict(bb)
-                    if mb is None
-                    else {
-                        "left": min(mb["left"], bb["left"]),
-                        "right": max(mb["right"], bb["right"]),
-                        "bottom": min(mb["bottom"], bb["bottom"]),
-                        "top": max(mb["top"], bb["top"]),
-                    }
-                )
-            all_rows.extend(rows)
-        manifest = spark.createDataFrame(
-            all_rows, schema="path string, seq long, offset long, size long"
-        )
-        n = parallelism or min(len(all_rows), spark.sparkContext.defaultParallelism) or 1
-        entities = manifest.repartition(n).mapInArrow(
-            _decode_partition, ENTITY_SPARK_SCHEMA
-        )
-        return entities, merged
-    refs = scan_blobs(path)
-    header = None
-    data_refs = []
-    for r in refs:
-        if r.blob_type == "OSMHeader":
-            header = decode_header_block(read_blob_payload(path, r.offset, r.size))
-        elif r.blob_type == "OSMData":
-            data_refs.append(r)
-        # unknown blob types are skipped per spec ("parsers should ignore")
-    if header is None:
-        header = {"required_features": [], "optional_features": [], "bbox": None}
+    ``path`` is one .pbf file or a LIST of them (a planet split into
+    regional extracts). The driver scans every file's headers in one
+    loop, bins all OSMData blobs by compressed size (largest first into
+    the lightest bin) into ``parallelism`` decode tasks — by default
+    ``defaultParallelism``, never more than there are blobs — and keeps
+    each task's blobs in file order. The decode is ONE shuffle-free
+    stage: ``spark.range`` yields one task index per partition, the
+    task list ships in the kernel closure, and each task seeks into its
+    files and decodes only its own byte ranges.
 
-    manifest = spark.createDataFrame(
-        [(path, r.seq, r.offset, r.size) for r in data_refs],
-        schema="path string, seq long, offset long, size long",
+    The header is the first file's own header dict; each further file
+    is merged into it: feature lists unioned (first-seen order), bbox
+    the envelope union. Entities appearing in several extracts
+    (overlapping clips) are NOT deduplicated — ids are global, so a
+    plain dropDuplicates('kind','id') downstream is exact.
+    """
+    paths = [path] if isinstance(path, str) else list(path)
+    if not paths:
+        raise ValueError("read_pbf: empty path list")
+    header = None
+    blobs = []
+    for k, p in enumerate(paths):
+        h, refs = _scan_one(p)
+        if header is None:
+            header = h
+        else:
+            _merge_header(header, h)
+        blobs += [(k, r.offset, r.size) for r in refs]
+    n = max(1, min(len(blobs), parallelism or spark.sparkContext.defaultParallelism))
+    bins = sorted(_lpt(blobs, lambda b: b[2], n), key=lambda b: -b[0])
+    tasks = [sorted(members) for _, members in bins]
+    entities = spark.range(0, n, 1, n).mapInArrow(
+        _decode_tasks_factory(paths, tasks), ENTITY_SPARK_SCHEMA
     )
-    n = parallelism or min(len(data_refs), spark.sparkContext.defaultParallelism) or 1
-    entities = manifest.repartition(n).mapInArrow(_decode_partition, ENTITY_SPARK_SCHEMA)
     return entities, header
 
 
@@ -856,11 +889,11 @@ def assemble_way_geometries(ways_df: DataFrame, nodes_df: DataFrame) -> DataFram
     Join strategy (r3): the node side carries a ``shuffle_hash`` hint,
     for two reasons. (1) SAFETY: decode-derived DataFrames have no
     usable size statistics — Catalyst estimates them from the
-    kilobyte-sized blob manifest they grow out of, so without the hint
-    it plans a BROADCAST of the full node table. That "works" on a
-    large single box, but at planet scale it is a driver OOM, and a
-    plan that silently flips from working to fatal at 100x is the
-    wrong default. (2) SPEED among the shuffled strategies: node ids
+    ``spark.range`` of decode-task indexes they grow out of (tens of
+    bytes), so without the hint ``explain`` shows a BROADCAST hash join
+    of a decoded side. That "works" on a large single box, but at
+    planet scale it is a driver OOM, and a plan that silently flips
+    from working to fatal at 100x is the wrong default. (2) SPEED among the shuffled strategies: node ids
     are UNIQUE (no build-side skew) and the build rows are slim, so
     the per-partition hash map skips sorting both ~300M-row sides that
     sort-merge pays for. Build memory is bounded by

@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from osm_pbf_spark.sources import pbf_source as src
@@ -71,10 +72,115 @@ def test_way_geometry_assembly(spark, fixtures_dir):
     assert geoms[502]["is_closed"] is True
 
 
+def _job_stage_tasks(spark, group, fn):
+    """Run ``fn`` under a job group -> [[tasks per stage] per job]."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, "read_pbf test")
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    st = sc.statusTracker()
+    return [
+        [st.getStageInfo(s).numTasks for s in st.getJobInfo(j).stageIds]
+        for j in st.getJobIdsForGroup(group)
+    ]
+
+
+def _header_only_pbf(path, **header):
+    from osm_pbf_spark.pbf import encoder as E
+
+    E.write_pbf(str(path), [], header_block=E.encode_header_block(**header))
+    return str(path)
+
+
+def _reference_merge(headers):
+    """The multi-file header merge: feature lists unioned in first-seen
+    order, bbox the envelope union."""
+    merged = {"required_features": [], "optional_features": [], "bbox": None}
+    for h in headers:
+        for key in ("required_features", "optional_features"):
+            merged[key] += [f for f in h[key] if f not in merged[key]]
+        bb, mb = h["bbox"], merged["bbox"]
+        if bb is not None:
+            merged["bbox"] = dict(bb) if mb is None else {
+                "left": min(mb["left"], bb["left"]),
+                "right": max(mb["right"], bb["right"]),
+                "bottom": min(mb["bottom"], bb["bottom"]),
+                "top": max(mb["top"], bb["top"]),
+            }
+    return merged
+
+
 def test_decode_is_distributed(spark, fixtures_dir):
-    """The plan must contain no shuffle before the decode stage."""
-    entities, _ = src.read_pbf(spark, f"{fixtures_dir}/multiblob.osm.pbf", parallelism=4)
-    assert entities.rdd.getNumPartitions() == 4
+    """The decode is ONE shuffle-free stage: the executed plan has a
+    ``Range`` leaf and no ``Exchange``, and a full scan runs one job
+    with one stage of ``parallelism`` tasks — for one file and for a
+    list of files alike."""
+    one = f"{fixtures_dir}/multiblob.osm.pbf"
+    for i, path in enumerate([one, [one, f"{fixtures_dir}/mixed.osm.pbf"]]):
+        entities, _ = src.read_pbf(spark, path, parallelism=4)
+        plan = entities._jdf.queryExecution().executedPlan().toString()
+        assert "Range" in plan and "Exchange" not in plan
+        # a noop write scans every row without adding an aggregate
+        # exchange the way DataFrame.count() would
+        scan = lambda: entities.write.format("noop").mode("overwrite").save()  # noqa: E731
+        assert _job_stage_tasks(spark, f"read-{i}", scan) == [[4]]
+    # never more tasks than blobs (multiblob has 4)
+    assert src.read_pbf(spark, one, parallelism=2)[0].rdd.getNumPartitions() == 2
+    assert src.read_pbf(spark, one, parallelism=64)[0].rdd.getNumPartitions() == 4
+
+
+def test_list_header_is_the_merge(spark, fixtures_dir, tmp_path):
+    """A list read merges the headers; a one-file list returns exactly
+    the single-path header."""
+    from osm_pbf_spark.pbf.decode import decode_header_block
+    from osm_pbf_spark.pbf.framing import read_blob_payload, scan_blobs
+
+    paths = [
+        f"{fixtures_dir}/minimal.osm.pbf",
+        f"{fixtures_dir}/multiblob.osm.pbf",
+        _header_only_pbf(
+            tmp_path / "east.osm.pbf",
+            bbox_nanodeg=(150_000_000_000, 170_000_000_000, 60_000_000_000, 0),
+            optional_features=("Sort.Type_then_ID",),
+        ),
+    ]
+    headers = []
+    for p in paths:
+        r = next(r for r in scan_blobs(p) if r.blob_type == "OSMHeader")
+        headers.append(decode_header_block(read_blob_payload(p, r.offset, r.size)))
+
+    _, merged = src.read_pbf(spark, paths)
+    ref = _reference_merge(headers)
+    assert {k: merged[k] for k in ref} == ref
+    assert merged["bbox"] == pytest.approx(
+        {"left": 13.0, "right": 170.0, "bottom": -34.0, "top": 60.0}
+    )
+    assert merged["optional_features"] == ["Sort.Type_then_ID"]
+    for p, h in zip(paths, headers):
+        assert src.read_pbf(spark, p)[1] == h
+        assert src.read_pbf(spark, [p])[1] == h
+
+
+def test_header_only_pbf(spark, tmp_path):
+    """A file with no OSMData blobs reads as an empty entity frame plus
+    its header, as a path and as a list."""
+    path = _header_only_pbf(
+        tmp_path / "empty.osm.pbf",
+        bbox_nanodeg=(-1_000_000_000, 2_000_000_000, 3_000_000_000, -4_000_000_000),
+    )
+    want = {
+        "required_features": ["OsmSchema-V0.6", "DenseNodes"],
+        "optional_features": [],
+        "bbox": {"left": -1.0, "right": 2.0, "top": 3.0, "bottom": -4.0},
+        "writingprogram": "osm_pbf_spark-fixtures",
+    }
+    for arg in (path, [path]):
+        entities, header = src.read_pbf(spark, arg)
+        assert header == want
+        assert entities.schema == src.ENTITY_SPARK_SCHEMA
+        assert entities.collect() == []
 
 
 def test_pack_vertex_out_of_range_raises(spark):
@@ -84,7 +190,6 @@ def test_pack_vertex_out_of_range_raises(spark):
     through the assembly untouched (the regroup shuffles raw scalar
     rows), so out-of-range coords are NOT an error here — same
     tolerance the struct path always had."""
-    import pytest
     from pyspark.errors.exceptions.captured import SparkRuntimeException
 
     from osm_pbf_spark.sources.pbf_source import assemble_way_geometries
