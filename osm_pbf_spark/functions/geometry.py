@@ -36,16 +36,16 @@ def point_in_ring(lat: np.ndarray, lon: np.ndarray, ring: np.ndarray) -> np.ndar
     m = len(ry)
     inside = np.zeros(len(y), dtype=bool)
     j = m - 1
-    for i in range(m):
-        yi, xi = ry[i], rx[i]
-        yj, xj = ry[j], rx[j]
-        cond = (yi > y) != (yj > y)
-        # same operation order as the oracle: (xj-xi)*(y-yi)/(yj-yi)+xi
-        with np.errstate(divide="ignore", invalid="ignore"):
+    with np.errstate(divide="ignore", invalid="ignore"):
+        for i in range(m):
+            yi, xi = ry[i], rx[i]
+            yj, xj = ry[j], rx[j]
+            cond = (yi > y) != (yj > y)
+            # same operation order as the oracle: (xj-xi)*(y-yi)/(yj-yi)+xi
             xint = (xj - xi) * (y - yi) / (yj - yi) + xi
-        crosses = cond & (x < xint)
-        inside ^= crosses
-        j = i
+            crosses = cond & (x < xint)
+            inside ^= crosses
+            j = i
     return inside
 
 

@@ -502,7 +502,6 @@ def knn_join(
             fine: with_cell(candidates.select("lat", "lon"), fine, out_col="cell")
             .groupBy("cell")
             .agg(F.count(F.lit(1)).alias("cnt"))
-            .cache()
         }
         for lvl in levels[1:]:
             prev = counts[fine]
@@ -514,12 +513,18 @@ def knn_join(
                 )
                 + F.lit(lvl)
             ).alias("cell")
-            counts[lvl] = prev.groupBy(parent).agg(F.sum("cnt").alias("cnt")).cache()
+            counts[lvl] = prev.groupBy(parent).agg(F.sum("cnt").alias("cnt"))
 
         # assign each query the DEEPEST level whose 3x3 window already
-        # holds >= 4k candidates (cheap windows), else the coarsest
+        # holds >= 4k candidates (cheap windows), else the coarsest: the
+        # qualifying (query, level) pairs of all levels in one union,
+        # the max level per query. A lazy localCheckpoint materializes
+        # the assignment once (at the level-group collect below): the
+        # returned plan reads it in every level group's query side,
+        # after this function returns, and its blocks go when the plan
+        # does.
         qpts = queries.select(F.col(query_id).alias("_qid"), "lat", "lon")
-        assign = None
+        picked = None
         min_cands = max(4 * k, 16)
         for lvl in levels:
             qc = with_cell(qpts, lvl, out_col="cell")
@@ -531,18 +536,13 @@ def knn_join(
                 .agg(F.sum(F.coalesce(F.col("cnt"), F.lit(0))).alias("_wc"))
                 .withColumn("_lvl", F.lit(lvl))
             )
-            picked = win.filter(F.col("_wc") >= min_cands).select("_qid", "_lvl")
-            if assign is None:
-                assign = picked
-            else:
-                assign = assign.unionByName(
-                    picked.join(assign, "_qid", "left_anti")
-                )
+            ok = win.filter(F.col("_wc") >= min_cands).select("_qid", "_lvl")
+            picked = ok if picked is None else picked.unionByName(ok)
         assign = (
             qpts.select("_qid")
-            .join(assign, "_qid", "left")
+            .join(picked.groupBy("_qid").agg(F.max("_lvl").alias("_lvl")), "_qid", "left")
             .fillna({"_lvl": levels[-1]})
-            .cache()
+            .localCheckpoint(eager=False)
         )
         level_groups = [r["_lvl"] for r in assign.select("_lvl").distinct().collect()]
         out = None
@@ -558,9 +558,6 @@ def knn_join(
                 query_id, cand_id, exclude_self,
             )
             out = part if out is None else out.unionByName(part)
-        for c in counts.values():
-            c.unpersist()
-        assign.unpersist()
         return out
 
     # explicit level: the same fixed two-round plan, no driver pacing

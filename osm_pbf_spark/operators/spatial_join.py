@@ -25,6 +25,7 @@ from dataclasses import dataclass, field
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -89,12 +90,13 @@ def polygon_cell_cover(polygons: list[Polygon], level: int) -> pd.DataFrame:
         cell_ids = C.xy_to_cell(gx, gy, level)
         c_lat0, c_lat1, c_lon0, c_lon1 = C.cell_bounds(cell_ids)
 
-        inside_count = np.zeros(len(cell_ids), dtype=np.int64)
-        for plat, plon in (
-            (c_lat0, c_lon0), (c_lat0, c_lon1), (c_lat1, c_lon0), (c_lat1, c_lon1),
-            ((c_lat0 + c_lat1) / 2.0, (c_lon0 + c_lon1) / 2.0),
-        ):
-            inside_count += point_in_polygon(plat, plon, poly.rings)
+        # the 4 corners + center of every cell in ONE crossing-number pass
+        samples = point_in_polygon(
+            np.concatenate([c_lat0, c_lat0, c_lat1, c_lat1, (c_lat0 + c_lat1) / 2.0]),
+            np.concatenate([c_lon0, c_lon1, c_lon0, c_lon1, (c_lon0 + c_lon1) / 2.0]),
+            poly.rings,
+        )
+        inside_count = samples.reshape(5, len(cell_ids)).sum(axis=0)
 
         eps_lat = (c_lat1 - c_lat0) * 1e-9
         eps_lon = (c_lon1 - c_lon0) * 1e-9
@@ -375,6 +377,62 @@ def _np_rings(rings_cell) -> list[np.ndarray]:
     ]
 
 
+def _struct_fields(arr: pa.StructArray) -> dict[str, pa.Array]:
+    """Children of a struct array by name, aligned with its rows."""
+    return dict(zip((f.name for f in arr.type), arr.flatten()))
+
+
+def _arrow_rings(rings_col: pa.ListArray):
+    """``_rings`` column (list<struct<ring_idx, pts list<struct<lat,
+    lon>>>>) -> ``rings(i)`` giving row i's rings as (m, 2) float64
+    arrays, the same arrays ``_np_rings`` builds, without a Python
+    object per vertex."""
+    ro = rings_col.offsets.to_numpy()
+    pts = _struct_fields(rings_col.values)["pts"]
+    po = pts.offsets.to_numpy()
+    v = _struct_fields(pts.values)
+    lat = v["lat"].to_numpy(zero_copy_only=False).astype(np.float64, copy=False)
+    lon = v["lon"].to_numpy(zero_copy_only=False).astype(np.float64, copy=False)
+
+    def rings(i: int) -> list[np.ndarray]:
+        return [
+            np.column_stack((lat[po[k] : po[k + 1]], lon[po[k] : po[k + 1]]))
+            for k in range(ro[i], ro[i + 1])
+        ]
+
+    return rings
+
+
+def _refine_rings_factory(names: list[str], lat_col: str, lon_col: str):
+    """Exact refine over rows (poly_id, _cands, _rings): each row holds
+    ONE polygon's boundary candidates (list of point structs) and its
+    rings; emits the candidates inside, as rows of ``names`` (the point
+    columns plus poly_id). One crossing-number call per polygon, Arrow
+    batches of polygons per Python call."""
+
+    def _refine(batches):
+        for b in batches:
+            cands = b.column("_cands")
+            co = cands.offsets.to_numpy()
+            pts = _struct_fields(cands.values)
+            lat = pts[lat_col].to_numpy(zero_copy_only=False)
+            lon = pts[lon_col].to_numpy(zero_copy_only=False)
+            rings = _arrow_rings(b.column("_rings"))
+            keep = np.zeros(len(lat), dtype=bool)
+            for i in range(b.num_rows):
+                a, z = co[i], co[i + 1]
+                if a < z:
+                    keep[a:z] = point_in_polygon(lat[a:z], lon[a:z], rings(i))
+            lo, hi = co[0], co[-1]
+            sel = keep[lo:hi]
+            owner = np.repeat(np.arange(b.num_rows), np.diff(co))[sel]
+            cols = {c: arr.slice(lo, hi - lo).filter(pa.array(sel)) for c, arr in pts.items()}
+            cols["poly_id"] = b.column("poly_id").take(pa.array(owner))
+            yield pa.RecordBatch.from_arrays([cols[c] for c in names], names=names)
+
+    return _refine
+
+
 def rings_cell_cover(
     rings_df: DataFrame, level: int | str, target_cells: int = 256
 ) -> DataFrame:
@@ -440,9 +498,14 @@ def pip_join_rings(
          killed by measured salting (operators.skew) with AQE as
          backstop;
       3. refine: `full`-cell candidates bypass Python (provably inside);
-         boundary candidates COGROUP with their polygon's rings on
-         poly_id — the ring payload is shuffled once per polygon, not
-         duplicated per candidate row. The grouped-rings subtree is
+         boundary candidates collapse to ONE row per polygon (a list of
+         candidate rows) that joins its polygon's rings on poly_id —
+         the ring payload is shuffled once per polygon, not duplicated
+         per candidate row — and one mapInArrow kernel refines Arrow
+         batches of polygons, one crossing-number call per polygon (a
+         per-group pandas UDF paid ~1-4 ms of Python per polygon). The
+         join is pinned to shuffle_hash, so the polygon side is never
+         broadcast through the driver. The grouped-rings subtree is
          shared with the cover pass, so its shuffle is reused
          (ReuseExchange) rather than re-aggregated from scratch.
 
@@ -469,21 +532,12 @@ def pip_join_rings(
     full_part = cand.filter(F.col("full")).drop("full")
     boundary = cand.filter(~F.col("full")).drop("full")
 
-    def _refine(cand_pdf: pd.DataFrame, rings_pdf: pd.DataFrame) -> pd.DataFrame:
-        if not len(cand_pdf) or not len(rings_pdf):
-            return cand_pdf.iloc[0:0]
-        rings = _np_rings(rings_pdf["_rings"].iloc[0])
-        keep = point_in_polygon(
-            cand_pdf[lat_col].to_numpy(np.float64),
-            cand_pdf[lon_col].to_numpy(np.float64),
-            rings,
-        )
-        return cand_pdf[keep]
-
-    refined = (
-        boundary.groupBy("poly_id")
-        .cogroup(polys.groupBy("poly_id"))
-        .applyInPandas(_refine, out_schema)
+    pt_cols = [c for c in out_schema.names if c != "poly_id"]
+    per_poly = boundary.groupBy("poly_id").agg(
+        F.collect_list(F.struct(*pt_cols)).alias("_cands")
+    )
+    refined = per_poly.join(polys.hint("shuffle_hash"), "poly_id").mapInArrow(
+        _refine_rings_factory(out_schema.names, lat_col, lon_col), out_schema
     )
     return full_part.unionByName(refined)
 

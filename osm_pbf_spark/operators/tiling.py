@@ -1009,7 +1009,7 @@ def clip_polygons_to_tiles(
 
     Plan: driver builds the (ring, tile) candidate rows (the pip_join
     list-of-Polygon convention — 10³-10⁵ polygons; use a rings
-    DataFrame + cogroup refine, the pip_join_rings pattern, beyond
+    DataFrame + per-polygon refine, the pip_join_rings pattern, beyond
     that), rings broadcast once, ONE mapInPandas over candidates —
     embarrassingly parallel, no shuffle.
     """
