@@ -370,13 +370,6 @@ def _grouped_rings(rings_df: DataFrame) -> DataFrame:
     )
 
 
-def _np_rings(rings_cell) -> list[np.ndarray]:
-    return [
-        np.asarray([[q["lat"], q["lon"]] for q in r["pts"]], dtype=np.float64)
-        for r in rings_cell
-    ]
-
-
 def _struct_fields(arr: pa.StructArray) -> dict[str, pa.Array]:
     """Children of a struct array by name, aligned with its rows."""
     return dict(zip((f.name for f in arr.type), arr.flatten()))
@@ -385,8 +378,8 @@ def _struct_fields(arr: pa.StructArray) -> dict[str, pa.Array]:
 def _arrow_rings(rings_col: pa.ListArray):
     """``_rings`` column (list<struct<ring_idx, pts list<struct<lat,
     lon>>>>) -> ``rings(i)`` giving row i's rings as (m, 2) float64
-    arrays, the same arrays ``_np_rings`` builds, without a Python
-    object per vertex."""
+    arrays of (lat, lon), in list order, without a Python object per
+    vertex."""
     ro = rings_col.offsets.to_numpy()
     pts = _struct_fields(rings_col.values)["pts"]
     po = pts.offsets.to_numpy()
@@ -437,7 +430,7 @@ def rings_cell_cover(
     rings_df: DataFrame, level: int | str, target_cells: int = 256
 ) -> DataFrame:
     """Distributed cell cover of a RINGS DataFrame -> (cell, poly_id,
-    full, level) rows, computed entirely on executors (one mapInPandas
+    full, level) rows, computed entirely on executors (one mapInArrow
     over polygon rows; same classification as polygon_cell_cover).
 
     ``level="auto"`` normalizes per polygon (pick_cover_level): without
@@ -450,19 +443,25 @@ def rings_cell_cover(
 def _rings_cover_from_grouped(
     polys: DataFrame, level: int | str, target_cells: int
 ) -> DataFrame:
+    schema = pa.schema(
+        [("cell", pa.int64()), ("poly_id", pa.string()),
+         ("full", pa.bool_()), ("level", pa.int32())]
+    )
+
     def _cover(batches):
-        for pdf in batches:
+        for b in batches:
+            rings = _arrow_rings(b.column("_rings"))
             by_level: dict[int, list[Polygon]] = {}
-            for pid, rings in zip(pdf["poly_id"], pdf["_rings"]):
-                p = Polygon(pid, _np_rings(rings))
+            for i, pid in enumerate(b.column("poly_id").to_pylist()):
+                p = Polygon(pid, rings(i))
                 lvl = level if level != "auto" else pick_cover_level(p, target_cells)
                 by_level.setdefault(lvl, []).append(p)
             for lvl, group in sorted(by_level.items()):
                 out = polygon_cell_cover(group, lvl)
                 out["level"] = np.int32(lvl)
-                yield out
+                yield pa.RecordBatch.from_pandas(out, schema=schema, preserve_index=False)
 
-    return polys.mapInPandas(
+    return polys.mapInArrow(
         _cover, "cell long, poly_id string, full boolean, level int"
     )
 
