@@ -15,8 +15,11 @@ becomes an arbitrarily parallel scan:
    per blob.
 
 The decode emits ONE unified entity schema (kind + nullable
-refs/members) so the file is read and decoded exactly once; ``nodes()``
-/ ``ways()`` / ``relations()`` are cheap filters on top. At cluster
+refs/members); ``nodes()`` / ``ways()`` / ``relations()`` are filters
+on top. A single consumer reads and decodes every blob once, but
+differently filtered consumers do not share the decode:
+``assemble_way_geometries(ways(ents), nodes(ents))`` runs two
+``MapInArrow`` decode leaves, so the file is decoded twice. At cluster
 scale each executor seeks independently into (an HDFS/S3 copy of) the
 file — no shuffle anywhere in the decode stage.
 """

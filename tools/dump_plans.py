@@ -53,8 +53,6 @@ def main() -> None:
         "",
     ]
     for name, note in QUERIES:
-        if name not in qs:
-            continue
         df = qs[name](spark, sf_dir)
         plan = df._sc._jvm.PythonSQLUtils.explainString(
             df._jdf.queryExecution(), "formatted"
