@@ -14,9 +14,10 @@ and its exact leaf test becomes a batched-pandas-UDF refine.
 
 At 10^12-doc scale stage 1 stays shuffle-free (cover is tiny:
 #polygons x cells/polygon) and stage 2 is narrow. For polygon sets too
-large to broadcast there is a `shuffle` strategy that shuffles the
-point side on cell — and THERE a dense urban cell is a hot key, killed
-by operators.skew measured salting (see the strategy branch below).
+large to broadcast there is a `shuffle` strategy: the polygon list
+becomes a rings frame and runs pip_join_rings' plan, which shuffles
+the point side on cell — and THERE a dense urban cell is a hot key,
+killed by operators.skew measured salting.
 """
 
 from __future__ import annotations
@@ -125,38 +126,6 @@ def polygon_cell_cover(polygons: list[Polygon], level: int) -> pd.DataFrame:
     return pd.DataFrame(rows)
 
 
-def polygon_cell_cover_dist(
-    spark: SparkSession, polygons: list[Polygon], level: int, slice_size: int = 64
-) -> DataFrame:
-    """Distributed polygon cell cover: same rows as polygon_cell_cover
-    but computed by executors, ``slice_size`` polygons per task. The
-    driver-side loop is fine to ~10^5 polygons at target_cells=256;
-    for larger sets (the pip_join ``shuffle`` strategy's regime) the
-    per-polygon work distributes embarrassingly — rings ship PICKLED
-    inside an Arrow binary column, never as JVM row objects."""
-    import pickle
-
-    import pandas as pd
-
-    slices = [
-        pickle.dumps([(p.poly_id, p.rings) for p in polygons[i : i + slice_size]])
-        for i in range(0, len(polygons), slice_size)
-    ]
-    if not slices:
-        return spark.createDataFrame([], "cell long, poly_id string, full boolean")
-    src = spark.createDataFrame(
-        pd.DataFrame({"blob": slices}), "blob binary"
-    ).repartition(min(len(slices), spark.sparkContext.defaultParallelism * 4))
-
-    def _cover(batches):
-        for pdf in batches:
-            for blob in pdf["blob"]:
-                group = [Polygon(pid, rings) for pid, rings in pickle.loads(bytes(blob))]
-                yield polygon_cell_cover(group, level)
-
-    return src.mapInPandas(_cover, "cell long, poly_id string, full boolean")
-
-
 def with_cell(df: DataFrame, level: int, lat_col: str = "lat", lon_col: str = "lon",
               out_col: str = "cell") -> DataFrame:
     """Attach the Morton cell id — NATIVE column expression (whole-stage
@@ -179,12 +148,12 @@ def _explode_multilevel_cells(
     out of whole-stage codegen (~20x slower, measured 3.7 s vs 0.16 s
     on a 200k x 3-level probe)."""
     fin = max(levels)
-    base = points.withColumn(
-        "_cell_fin", C.cell_id_col(F.col(lat_col), F.col(lon_col), fin)
-    )
+    fine = C.cell_id_col(F.col(lat_col), F.col(lon_col), fin)
+    # withColumn, not a rename: a point frame read back from the
+    # engine's own table already carries a ``cell`` column to replace
     if len(levels) == 1:
-        return base.withColumnRenamed("_cell_fin", "cell")
-    return base.withColumn(
+        return points.withColumn("cell", fine)
+    return points.withColumn("_cell_fin", fine).withColumn(
         "cell",
         F.explode(F.array(*[
             F.col("_cell_fin") if lvl == fin else C.parent_col(F.col("_cell_fin"), fin, lvl)
@@ -228,12 +197,28 @@ def pip_join(
     test (functions.geometry convention) says p in poly — matching the
     brute-force oracle bit-for-bit. ``level="auto"`` covers each polygon
     at its own normalized level (see pick_cover_level) — bounded cover
-    size AND thin refine bands for any polygon-size mix. With the
-    broadcast strategy all levels run in ONE plan (point side exploded
-    to one cell per distinct level; level-tagged cell ids cannot
-    collide); the shuffle strategy joins per level so salting stays
-    per-level-keyed.
+    size AND thin refine bands for any polygon-size mix. All levels run
+    in ONE plan: the point side explodes to one cell per distinct level
+    (level-tagged cell ids cannot collide).
+
+    ``strategy="broadcast"`` broadcasts the driver-built cover. The
+    ``"shuffle"`` strategy, for polygon sets too large to broadcast,
+    turns the list into a rings frame and runs pip_join_rings' salted
+    shuffle join and refine on it, with the cover levels picked here on
+    the driver (no persisted cover, no level collect).
     """
+    if strategy == "shuffle":
+        levels = sorted({
+            level if level != "auto" else pick_cover_level(p, target_cells)
+            for p in polygons
+        })
+        polys = _grouped_rings(rings_frame(spark, polygons))
+        cover = _rings_cover_from_grouped(polys, level, target_cells)
+        return _join_rings(
+            spark, points, polys, cover, levels, lat_col, lon_col, salt_threshold
+        )
+    if strategy != "broadcast":
+        raise ValueError(f"strategy must be 'broadcast' or 'shuffle', got {strategy!r}")
     if level == "auto":
         by_level: dict[int, list[Polygon]] = {}
         for p in polygons:
@@ -244,7 +229,7 @@ def pip_join(
             # against an empty cover and yields an empty DataFrame with
             # the points-plus-poly_id schema instead of None
             level = 12
-        elif strategy == "broadcast":
+        else:
             # SINGLE-PLAN multi-level join (r3): cell ids embed their
             # level in the low 5 bits (cells.cell_id_col), so covers at
             # different levels never collide — one broadcast join over
@@ -265,46 +250,13 @@ def pip_join(
             pts = _explode_multilevel_cells(points, levels, lat_col, lon_col)
             cand = pts.join(F.broadcast(cover), "cell", "inner")
             return _refine_candidates(spark, cand, polygons, lat_col, lon_col)
-        else:
-            out = None
-            for lvl, group in sorted(by_level.items()):
-                part = pip_join(
-                    spark, points, group, lvl, lat_col, lon_col, strategy, target_cells
-                )
-                out = part if out is None else out.unionByName(part)
-            return out
 
-    if strategy != "broadcast" and len(polygons) > 2000:
-        # large-cover regime: compute the cover ON THE EXECUTORS
-        # (driver loop is fine to ~10^5 polygons; beyond that it and
-        # the createDataFrame upload become the bottleneck)
-        cover = polygon_cell_cover_dist(spark, polygons, level)
-    else:
-        cover_pdf = polygon_cell_cover(polygons, level)
-        cover = spark.createDataFrame(cover_pdf) if len(cover_pdf) else spark.createDataFrame(
-            [], "cell long, poly_id string, full boolean"
-        )
+    cover_pdf = polygon_cell_cover(polygons, level)
+    cover = spark.createDataFrame(cover_pdf) if len(cover_pdf) else spark.createDataFrame(
+        [], "cell long, poly_id string, full boolean"
+    )
     pts = with_cell(points, level, lat_col, lon_col)
-    if strategy == "broadcast":
-        cand = pts.join(F.broadcast(cover), "cell", "inner")
-    else:
-        # shuffle strategy for polygon/cover sets too large to broadcast:
-        # the equi-join shuffles the POINT side on cell, so a dense urban
-        # cell (BASELINE's skew case) would land one reducer with 10^8+
-        # rows. MEASURED SALTING (SURVEY §2.3 G4, operators.skew): one
-        # cheap count-by-cell pass finds heavy cells, the point side
-        # salts them pmod(hash(lat,lon), k), and the (small) cover side
-        # replicates its rows for heavy cells across all k salts — the
-        # join key becomes (cell, salt) and a hot cell spreads over k
-        # reducers. AQE's skew-join split remains on as a backstop for
-        # everything under the measuring threshold.
-        from .skew import heavy_hitters, replicate_for_salt, with_salt
-
-        heavy = heavy_hitters(pts, "cell", salt_threshold)
-        pts_s = with_salt(pts, "cell", heavy, [lat_col, lon_col], "_salt")
-        cover_s = replicate_for_salt(cover, "cell", heavy, "_salt")
-        cand = pts_s.join(cover_s, ["cell", "_salt"], "inner").drop("_salt")
-
+    cand = pts.join(F.broadcast(cover), "cell", "inner")
     return _refine_candidates(spark, cand, polygons, lat_col, lon_col)
 
 
@@ -315,7 +267,7 @@ def _refine_candidates(
     lat_col: str,
     lon_col: str,
 ) -> DataFrame:
-    """Exact stage shared by the pip_join paths: `full`-cell candidates
+    """Exact stage of the broadcast pip_join: `full`-cell candidates
     bypass Python (provably inside); boundary candidates go through one
     vectorized crossing-number refine against the broadcast rings."""
     rings_by_poly = {p.poly_id: [r.copy() for r in p.rings] for p in polygons}
@@ -359,6 +311,19 @@ def rings_from_closed_ways(geoms_df: DataFrame) -> DataFrame:
         F.concat(F.lit("way/"), F.col("way_id").cast("string")).alias("poly_id"),
         F.lit(0).alias("ring_idx"),
         F.slice("points", 1, F.size("points") - 1).alias("pts"),
+    )
+
+
+def rings_frame(spark: SparkSession, polygons: list[Polygon]) -> DataFrame:
+    """Driver polygon list -> rings DataFrame (RINGS_SCHEMA), one row per
+    ring with the ring's own vertices."""
+    return spark.createDataFrame(
+        [
+            (p.poly_id, k, [(float(la), float(lo)) for la, lo in ring])
+            for p in polygons
+            for k, ring in enumerate(p.rings)
+        ],
+        RINGS_SCHEMA,
     )
 
 
@@ -481,15 +446,16 @@ def pip_join_rings(
     list and 100k driver collect don't fit (SURVEY §2.3 G2/G3).
 
     Same exact crossing-number semantics as ``pip_join``; nothing about
-    the polygons ever lands on the driver (the only driver action is
-    the distinct cover-LEVEL list — at most 15 ints):
+    the polygons ever lands on the driver (the only driver action, for
+    ``level="auto"``, is the distinct cover-LEVEL list — at most 15 ints):
 
       1. cover: one distributed pass over polygon rows
          (rings_cell_cover), per-polygon level normalization when
          ``level="auto"`` (same pick_cover_level rule as pip_join —
          bounded cover work for huge polygons, thin refine bands for
-         small ones); the cover is persisted so the Python cover pass
-         runs once, not once per level;
+         small ones). The levels come from a light Python pass over the
+         outer rings' bboxes, so the cover itself runs once, inside the
+         join plan, and nothing is cached;
       2. coarse: ONE shuffle join for all cover levels — the point
          side explodes to its cell at each distinct level (level-tagged
          cell ids cannot collide), so the heavy-hitter count pass and
@@ -504,25 +470,66 @@ def pip_join_rings(
          batches of polygons, one crossing-number call per polygon (a
          per-group pandas UDF paid ~1-4 ms of Python per polygon). The
          join is pinned to shuffle_hash, so the polygon side is never
-         broadcast through the driver. The grouped-rings subtree is
-         shared with the cover pass, so its shuffle is reused
-         (ReuseExchange) rather than re-aggregated from scratch.
+         broadcast through the driver.
 
     ``rings_df`` schema: RINGS_SCHEMA (ring 0 outer, rest holes; no
     closing duplicate vertex).
     """
-    from .skew import heavy_hitters, replicate_for_salt, with_salt
-
     polys = _grouped_rings(rings_df)
-    cover = _rings_cover_from_grouped(polys, level, target_cells).persist()
-    levels = sorted(r["level"] for r in cover.select("level").distinct().collect())
+    levels = [level] if level != "auto" else _cover_levels(polys, target_cells)
+    cover = _rings_cover_from_grouped(polys, level, target_cells)
+    return _join_rings(
+        spark, points, polys, cover, levels, lat_col, lon_col, salt_threshold
+    )
+
+
+def _cover_levels(polys: DataFrame, target_cells: int) -> list[int]:
+    """Distinct pick_cover_level over a grouped-rings frame."""
+
+    def _levels(batches):
+        for b in batches:
+            rings = _arrow_rings(b.column("_rings"))
+            lvls = [
+                pick_cover_level(Polygon("", rings(i)), target_cells)
+                for i in range(b.num_rows)
+            ]
+            yield pa.record_batch({"level": pa.array(lvls, pa.int32())})
+
+    rows = polys.mapInArrow(_levels, "level int").distinct().collect()
+    return sorted(r["level"] for r in rows)
+
+
+def _join_rings(
+    spark: SparkSession,
+    points: DataFrame,
+    polys: DataFrame,
+    cover: DataFrame,
+    levels: list[int],
+    lat_col: str,
+    lon_col: str,
+    salt_threshold: int,
+) -> DataFrame:
+    """Salted shuffle join of ``points`` against ``cover`` (cover rows
+    at the given levels) and the exact refine against the grouped rings
+    ``polys`` — steps 2 and 3 of pip_join_rings."""
+    from .skew import heavy_hitters, replicate_for_salt, with_salt
 
     if levels:
         pts = _explode_multilevel_cells(points, levels, lat_col, lon_col)
         heavy = heavy_hitters(pts, "cell", salt_threshold)
         pts_s = with_salt(pts, "cell", heavy, [lat_col, lon_col], "_salt")
-        cov_s = replicate_for_salt(cover.drop("level"), "cell", heavy, "_salt")
-        cand = pts_s.join(cov_s, ["cell", "_salt"], "inner").drop("_salt", "cell")
+        # the cover joins as ONE row per cell listing its (poly_id, full)
+        # hits, inlined after the join: the full/boundary split below
+        # then filters Generate output, which Catalyst cannot push into
+        # the cover side, so both branches share one cover exchange
+        # (ReuseExchange) and the Python cover runs once
+        by_cell = cover.groupBy("cell").agg(
+            F.collect_list(F.struct("poly_id", "full")).alias("_hits")
+        )
+        cov_s = replicate_for_salt(by_cell, "cell", heavy, "_salt")
+        cand = pts_s.join(cov_s, ["cell", "_salt"], "inner").select(
+            *[c for c in pts_s.columns if c not in ("cell", "_salt")], F.inline("_hits")
+        )
     else:  # empty polygon side: empty result, points+poly_id schema
         empty = spark.createDataFrame([], "cell long, poly_id string, full boolean")
         cand = with_cell(points, 12, lat_col, lon_col).join(empty, "cell").drop("cell")

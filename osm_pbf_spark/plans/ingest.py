@@ -7,9 +7,9 @@ resumes from the last committed split (BASELINE.json:6,14).
 Splits are contiguous BLOB RANGES of the input file: lineage for each
 split records exactly which byte ranges produced it (C3). At planet
 scale a split is O(hundreds) of blobs; here fixtures use small splits
-to exercise the protocol. The sorted layout runs consecutive splits in
-WAVES, one Spark job each, so the split size sets the commit (and
-resume) granularity, not the task count.
+to exercise the protocol. The ingest runs consecutive splits in WAVES,
+one Spark job each, so the split size sets the commit (and resume)
+granularity, not the task count.
 """
 
 from __future__ import annotations
@@ -24,9 +24,7 @@ from pyspark.sql import DataFrame, SparkSession
 from ..sink.iceberg_like import IcebergLikeSink
 from ..sources.pbf_source import (
     FILE_REPORT_SPARK_SCHEMA,
-    _decode_render_partition_factory,
     _decode_render_write_bins_factory,
-    _doc_cell_schemas,
     _lpt,
     _scan_one,
 )
@@ -89,7 +87,6 @@ def ingest_pbf(
     cell_level: int = 12,
     blobs_per_split: int = 2,
     fail_before_split: str | None = None,
-    layout: str = "sorted",
 ) -> IcebergLikeSink:
     """Run (or RESUME) the ingest. Returns the sink for reading.
 
@@ -99,37 +96,28 @@ def ingest_pbf(
     injects a crash before that split's manifest commit — used by the
     kill/resume test.
 
-    ``layout``:
-      - "sorted" (default): consecutive pending splits are grouped into
-        WAVES of at least 4 x defaultParallelism blobs, and each wave
-        is ONE Spark job with NO shuffle. The driver bins every split's
-        blobs by compressed size (a bin never crosses a split; a wave
-        gets ~defaultParallelism bins, or one per split if it has more
-        splits than that) and groups the bins by size into at most
-        defaultParallelism tasks. For each bin a task decodes, renders,
-        cells, sorts the docs by cell in Arrow and writes one parquet
-        file into the split's data directory. After the job the driver
-        commits the wave's splits in split order, so a kill loses at
-        most one wave of work and the task count comes from blob bytes
-        and cores, not from ``blobs_per_split``. Pruning comes
-        from tight per-file/row-group [cell_min, cell_max] metrics
-        recorded in the manifest (Iceberg-style). At 60M docs the
-        partitionBy shuffle of nested span rows cost ~12x the parquet
-        write itself — this layout removes it.
-      - "partitioned": hive-style cell_prefix directories via an AQE
-        REBALANCE shuffle (skew-splitting, bounded files/dir), one Spark
-        job per split — for consumers that need directory layout.
+    Consecutive pending splits are grouped into WAVES of at least
+    4 x defaultParallelism blobs, and each wave is ONE Spark job with
+    NO shuffle. The driver bins every split's blobs by compressed size
+    (a bin never crosses a split; a wave gets ~defaultParallelism bins,
+    or one per split if it has more splits than that) and groups the
+    bins by size into at most defaultParallelism tasks. For each bin a
+    task decodes, renders, cells, sorts the docs by cell in Arrow and
+    writes one parquet file into the split's data directory. After the
+    job the driver commits the wave's splits in split order, so a kill
+    loses at most one wave of work and the task count comes from blob
+    bytes and cores, not from ``blobs_per_split``. Pruning comes from
+    tight per-file/row-group [cell_min, cell_max] metrics recorded in
+    the manifest (Iceberg-style). At 60M docs a partitionBy shuffle of
+    nested span rows cost ~12x the parquet write itself — this layout
+    has none.
     """
     header, data_refs = _scan_one(pbf_path)
     splits = [
         (f"{i:06d}", data_refs[i : i + blobs_per_split])
         for i in range(0, len(data_refs), blobs_per_split)
     ]
-    sink = IcebergLikeSink(
-        table_root,
-        partition_by=[] if layout == "sorted" else ["cell_prefix"],
-        stats_col="cell",
-    )
+    sink = IcebergLikeSink(table_root, stats_col="cell")
     file_sha = _file_sha256(pbf_path)
     todo = set(sink.resume_plan([sid for sid, _ in splits]))
     pending = [(sid, split_refs) for sid, split_refs in splits if sid in todo]
@@ -146,34 +134,11 @@ def ingest_pbf(
         for sid, split_refs in pending
     }
     par = spark.sparkContext.defaultParallelism
-    if layout == "sorted":
-        for wave in _plan_waves(pending, 4 * par):
-            _ingest_wave(
-                spark, sink, pbf_path, table_root, wave, cell_level, par, lineage,
-                fail_before_split,
-            )
-    else:
-        _, doc_cell_schema = _doc_cell_schemas()
-        for sid, split_refs in pending:
-            manifest_df = spark.createDataFrame(
-                [(pbf_path, r.seq, r.offset, r.size) for r in split_refs],
-                schema="path string, seq long, offset long, size long",
-            )
-            # fused decode -> span render -> Morton cell in ONE
-            # mapInArrow pass: entity data crosses the Arrow boundary
-            # exactly once. cell_prefix (parent cell at level 4) is the
-            # directory-pruning partition column; cell/cell_prefix are
-            # -1 for docs with no point geometry (ways/relations before
-            # geometry assembly).
-            docs = manifest_df.repartition(min(len(split_refs), 4 * par)).mapInArrow(
-                _decode_render_partition_factory(cell_level), doc_cell_schema
-            )
-            sink.write_split(
-                docs,
-                sid,
-                lineage=lineage[sid],
-                fail_before_commit=(sid == fail_before_split),
-            )
+    for wave in _plan_waves(pending, 4 * par):
+        _ingest_wave(
+            spark, sink, pbf_path, table_root, wave, cell_level, par, lineage,
+            fail_before_split,
+        )
     sink.commit_snapshot({"pipeline": "ingest_pbf", "cell_level": str(cell_level)})
     return sink
 
@@ -189,7 +154,7 @@ def _ingest_wave(
     lineage: dict,
     fail_before_split: str | None,
 ) -> None:
-    """One wave of the sorted layout: ONE shuffle-free Spark job, then
+    """One wave of the ingest: ONE shuffle-free Spark job, then
     the driver commits the wave's splits in split order."""
     for sid, _ in wave:
         # the split is NOT committed (it is pending), so nothing under

@@ -10,7 +10,7 @@ callers. Replaces the reference's Postgres COPY sink (BASELINE.json:6).
 Layout:
 
     root/
-      data/split=<split_id>/[<part_col>=<v>/]part-*.parquet
+      data/split=<split_id>/[_bucket=<b>/]part-*.parquet
       _manifests/split-<split_id>.json     <- atomic per-split commit
       snapshot.json                        <- atomic table-level snapshot
 
@@ -128,7 +128,6 @@ class IcebergLikeSink:
     def __init__(
         self,
         root: str,
-        partition_by: list[str] | None = None,
         target_file_bytes: int = 16 * 1024 * 1024,
         stats_col: str | None = "cell",
         stats_cols: list[str] | None = None,
@@ -138,7 +137,6 @@ class IcebergLikeSink:
         bloom_depth: int = 3,
     ) -> None:
         self.root = root
-        self.partition_by = partition_by or []
         # HIDDEN PARTITIONING (Iceberg's bucket transform): rows are
         # laid out in ``bucket_by = (col, n)`` directories keyed by a
         # DERIVED 40-bit-md5 bucket of col — the bucket column never
@@ -181,10 +179,11 @@ class IcebergLikeSink:
         # prune files without any directory partitioning or shuffle.
         self.stats_col = stats_col
         # Without clustering, partitionBy fans every write task out
-        # across every partition dir (observed 1800+ tiny files for
-        # 64 MB). write_split REBALANCEs on the partition columns with
-        # this advisory size, so file count and write parallelism both
-        # track data volume. Raise toward 128-512 MB on a real cluster.
+        # across every bucket dir (observed 1800+ tiny files for 64 MB).
+        # write_split REBALANCEs a bucket_by layout with this advisory
+        # size, so file count and write parallelism both track data
+        # volume; compact(zorder=...) sizes its output files by it too.
+        # Raise toward 128-512 MB on a real cluster.
         self.target_file_bytes = target_file_bytes
         os.makedirs(os.path.join(root, _MANIFEST_DIR), exist_ok=True)
         os.makedirs(os.path.join(root, _SNAP_DIR), exist_ok=True)
@@ -235,8 +234,6 @@ class IcebergLikeSink:
         # is added (the bucket column must never appear on reads)
         table_schema = json.loads(df.schema.json())
         if self.bucket_by:
-            if self.partition_by:
-                raise ValueError("bucket_by cannot combine with partition_by")
             from pyspark.sql import functions as F
 
             bcol, nb = self.bucket_by
@@ -249,23 +246,14 @@ class IcebergLikeSink:
             df = df.withColumn("_bucket", bexpr).hint("rebalance", "_bucket")
         _ADV = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
         old_adv = spark.conf.get(_ADV, None)
-        if self.partition_by:
-            # AQE REBALANCE: hash-cluster on the partition columns, then
-            # split oversized partitions (the hot city prefix) and
-            # coalesce tiny ones using runtime shuffle statistics — the
-            # measured-salt pattern without an extra counting pass.
-            # Files per dir stay bounded and proportional to data size.
-            df = df.hint("rebalance", *self.partition_by)
         writer = df.write.mode("overwrite")
-        if self.stats_col and not self.partition_by:
-            # sorted layout: bound row-group size so cell-sorted files
-            # carry many TIGHT [min, max] row-group ranges — Spark's
-            # parquet reader then skips row groups on cell predicates
-            # even though each task's file spans a wide cell range
+        if self.stats_col:
+            # bound row-group size so stats-sorted files carry many
+            # TIGHT [min, max] row-group ranges — Spark's parquet reader
+            # then skips row groups on cell predicates even though each
+            # task's file spans a wide cell range
             writer = writer.option("parquet.block.size", str(8 * 1024 * 1024))
-        if self.partition_by:
-            writer = writer.partitionBy(*self.partition_by)
-        elif self.bucket_by:
+        if self.bucket_by:
             writer = writer.partitionBy("_bucket")
         try:
             spark.conf.set(_ADV, str(self.target_file_bytes))
@@ -390,7 +378,7 @@ class IcebergLikeSink:
             "schema": table_schema,
             "n_rows": n_rows,
             "n_bytes": n_bytes,
-            "partition_by": self.partition_by,
+            "partition_by": [],
             "replaces": sorted(replaces or []),
             "lineage": {
                 "engine_version": __version__,
@@ -1420,12 +1408,6 @@ class IcebergLikeSink:
         Returns the compaction manifest, or None when fewer than two
         live splits match (nothing to merge).
         """
-        if self.partition_by:
-            raise ValueError(
-                "compact() supports the stats-clustered layout; "
-                "directory-partitioned tables would lose their partition "
-                "columns on a file-list read"
-            )
         if self.bucket_by:
             raise ValueError(
                 "compact() on a bucket-partitioned table would destroy "

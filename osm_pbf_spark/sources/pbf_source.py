@@ -27,7 +27,7 @@ file — no shuffle anywhere in the decode stage.
 from __future__ import annotations
 
 import heapq
-from collections.abc import Iterator
+from collections.abc import Iterable, Iterator
 
 import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
@@ -106,114 +106,32 @@ def _unify(kind: str, tab: pa.Table) -> pa.Table:
     return pa.table(cols, schema=_ENTITY_ARROW_SCHEMA)
 
 
-def _decode_partition(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-    """mapInArrow kernel: (path, offset, size) rows -> entity batches.
+def _decode_blobs(blobs: Iterable[tuple[str, int, int]]) -> Iterator[pa.RecordBatch]:
+    """(path, offset, size) blobs -> entity batches.
 
     One output batch per blob keeps memory bounded at ~one inflated
     block (<= 32 MiB by spec), matching the reference's streaming
     posture.
     """
-    for batch in batches:
-        paths = batch.column("path").to_pylist()
-        offsets = batch.column("offset").to_pylist()
-        sizes = batch.column("size").to_pylist()
-        f = None
-        cur_path = None
-        try:
-            for path, off, size in zip(paths, offsets, sizes):
-                if path != cur_path:
-                    if f is not None:
-                        f.close()
-                    f = open(path, "rb")
-                    cur_path = path
-                raw = read_blob_payload(f, off, size)
-                tabs = decode_primitive_block(raw)
-                for kind_name, kind in (("node", "nodes"), ("way", "ways"),
-                                        ("relation", "relations")):
-                    t = tabs[kind]
-                    if len(t):
-                        yield from _unify(kind_name, t).to_batches()
-        finally:
-            if f is not None:
-                f.close()
-
-
-def _doc_cell_schemas():
-    from ..operators.docrender import DOC_ARROW_SCHEMA, DOC_SPARK_SCHEMA
-
-    arrow = DOC_ARROW_SCHEMA.append(pa.field("cell", pa.int64())).append(
-        pa.field("cell_prefix", pa.int64())
-    )
-    spark = T.StructType(
-        DOC_SPARK_SCHEMA.fields
-        + [T.StructField("cell", T.LongType()), T.StructField("cell_prefix", T.LongType())]
-    )
-    return arrow, spark
-
-
-def _decode_render_partition_factory(
-    cell_level: int, prefix_level: int = 4, sort_by_cell: bool = False
-):
-    """Fused decode -> render -> cell kernel for the ingest pipeline.
-
-    Chaining two mapInArrow stages forces Spark to materialize the full
-    entity batch as JVM rows and re-serialize it to Arrow between them
-    (measured: the intermediate hop alone cost ~8x the decode itself at
-    2M nodes). Fusing keeps the whole decode -> span render -> Morton
-    cell path inside ONE Python worker pass, so entity data crosses the
-    Arrow boundary exactly once — already rendered and cell-indexed.
-    """
-    import numpy as np
-
-    from ..functions import cells as C
-    from ..operators.docrender import _render_batch
-
-    arrow_schema, _ = _doc_cell_schemas()
-
-    def _cell_batch(ent: pa.RecordBatch) -> pa.RecordBatch:
-        doc = _render_batch(ent)
-        lat = doc.column("lat").to_numpy(zero_copy_only=False)
-        lon = doc.column("lon").to_numpy(zero_copy_only=False)
-        ok = np.isfinite(lat) & np.isfinite(lon)
-        cell = np.where(
-            ok,
-            C.cell_id(np.nan_to_num(lat), np.nan_to_num(lon), cell_level),
-            np.int64(-1),
-        ).astype(np.int64)
-        prefix = np.where(
-            ok, (cell >> np.int64(5)) >> np.int64(2 * (cell_level - prefix_level)),
-            np.int64(-1),
-        ).astype(np.int64)
-        return pa.record_batch(
-            list(doc.columns) + [pa.array(cell), pa.array(prefix)],
-            schema=arrow_schema,
-        )
-
-    def _fused(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for ent in _decode_partition(batches):
-            yield _cell_batch(ent)
-
-    if not sort_by_cell:
-        return _fused
-
-    def _fused_sorted(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        # Accumulate the task's batches, sort by cell (Arrow C++ take —
-        # cheap), and emit in chunks. Downstream plain parquet writes
-        # then carry TIGHT per-row-group/file [cell_min, cell_max]
-        # ranges: Iceberg-style metrics pruning with NO shuffle — at 60M
-        # docs the rebalance+partitionBy shuffle of nested span rows
-        # cost ~12x the parquet write itself. Task memory is bounded by
-        # the task's blobs (one ingest bin, at most one split), not the
-        # table.
-        acc = [_cell_batch(ent) for ent in _decode_partition(batches)]
-        if not acc:
-            return
-        tab = pa.Table.from_batches(acc, schema=arrow_schema)
-        order = pa.compute.sort_indices(tab.column("cell"))
-        tab = tab.take(order)
-        yield from tab.to_batches(max_chunksize=65536)
-
-    return _fused_sorted
+    f = None
+    cur_path = None
+    try:
+        for path, off, size in blobs:
+            if path != cur_path:
+                if f is not None:
+                    f.close()
+                f = open(path, "rb")
+                cur_path = path
+            raw = read_blob_payload(f, off, size)
+            tabs = decode_primitive_block(raw)
+            for kind_name, kind in (("node", "nodes"), ("way", "ways"),
+                                    ("relation", "relations")):
+                t = tabs[kind]
+                if len(t):
+                    yield from _unify(kind_name, t).to_batches()
+    finally:
+        if f is not None:
+            f.close()
 
 
 def polygons_from_closed_ways(geoms_df: DataFrame, max_polygons: int = 100_000):
@@ -685,8 +603,6 @@ def _decode_render_write_bins_factory(
     cell_level: int,
     table_root: str,
     tasks: list[list[tuple[str, str, list[int], list[int]]]],
-    prefix_level: int = 4,
-    rows_per_group: int = 65536,
 ):
     """Fused decode -> render -> cell -> SORT -> direct parquet write,
     one data file per BIN: a ``(split_id, path, offsets, sizes)`` group
@@ -694,42 +610,69 @@ def _decode_render_write_bins_factory(
     ``tasks`` (column ``id``, as ``spark.range`` yields them), each
     task a list of bins.
 
-    Each bin's blobs are decoded together, sorted by cell and written
-    with pyarrow into its split's ``data/split=<split_id>`` directory;
-    the task returns only a one-row FILE REPORT per bin (split id,
-    path, rows, bytes, cell min/max) to Spark. The Arrow->InternalRow
-    conversion and JVM parquet encode of the nested span rows — the
-    largest non-kernel cost of the ingest — never happen; the sink's
-    manifest protocol (not Hadoop's committer) is what makes files
-    visible, so a failed/duplicate task attempt just leaves an
-    invisible orphan file.
+    Each bin's blobs are decoded, rendered to span documents and given
+    their Morton cell and ``cell_prefix`` (the parent cell at level 4;
+    both -1 for docs with no point geometry) in ONE Python pass — chaining mapInArrow stages would materialize
+    every entity as JVM rows in between (measured ~8x the decode
+    itself at 2M nodes). The bin's docs are then sorted by cell and
+    written with pyarrow into its split's ``data/split=<split_id>``
+    directory; the task returns only a one-row FILE REPORT per bin
+    (split id, path, rows, bytes, cell min/max) to Spark. The
+    Arrow->InternalRow conversion and JVM parquet encode of the nested
+    span rows — the largest non-kernel cost of the ingest — never
+    happen; the sink's manifest protocol (not Hadoop's committer) is
+    what makes files visible, so a failed/duplicate task attempt just
+    leaves an invisible orphan file.
     """
     import os
     import uuid
 
+    import numpy as np
     import pyarrow.compute as pc
     import pyarrow.parquet as pq
 
-    sorted_kernel = _decode_render_partition_factory(
-        cell_level, prefix_level, sort_by_cell=True
+    from ..functions import cells as C
+    from ..operators.docrender import DOC_ARROW_SCHEMA, _render_batch
+
+    schema = DOC_ARROW_SCHEMA.append(pa.field("cell", pa.int64())).append(
+        pa.field("cell_prefix", pa.int64())
     )
+    prefix_shift = np.int64(2 * (cell_level - 4))
+
+    def _cell_batch(ent: pa.RecordBatch) -> pa.RecordBatch:
+        doc = _render_batch(ent)
+        lat = doc.column("lat").to_numpy(zero_copy_only=False)
+        lon = doc.column("lon").to_numpy(zero_copy_only=False)
+        ok = np.isfinite(lat) & np.isfinite(lon)
+        cell = np.where(
+            ok,
+            C.cell_id(np.nan_to_num(lat), np.nan_to_num(lon), cell_level),
+            np.int64(-1),
+        ).astype(np.int64)
+        prefix = np.where(
+            ok, (cell >> np.int64(5)) >> prefix_shift, np.int64(-1)
+        ).astype(np.int64)
+        return pa.record_batch(
+            list(doc.columns) + [pa.array(cell), pa.array(prefix)], schema=schema
+        )
 
     def _write_bin(split_id, path, offsets, sizes) -> pa.RecordBatch | None:
-        blobs = pa.record_batch(
-            {
-                "path": pa.array([path] * len(offsets)),
-                "offset": pa.array(offsets, pa.int64()),
-                "size": pa.array(sizes, pa.int64()),
-            }
-        )
-        out = list(sorted_kernel(iter([blobs])))
-        if not out:
+        docs = [
+            _cell_batch(ent)
+            for ent in _decode_blobs((path, off, size) for off, size in zip(offsets, sizes))
+        ]
+        if not docs:
             return None
-        tab = pa.Table.from_batches(out)
+        # sort by cell (Arrow C++ take — cheap): the file then carries
+        # TIGHT per-row-group/file [cell_min, cell_max] ranges,
+        # Iceberg-style metrics pruning with NO shuffle. Task memory is
+        # bounded by the bin's blobs, not the table.
+        tab = pa.Table.from_batches(docs, schema=schema)
+        tab = tab.take(pc.sort_indices(tab.column("cell")))
         fpath = os.path.join(
             table_root, "data", f"split={split_id}", f"part-{uuid.uuid4().hex}.parquet"
         )
-        pq.write_table(tab, fpath, row_group_size=rows_per_group, compression="snappy")
+        pq.write_table(tab, fpath, row_group_size=65536, compression="snappy")
         mm = pc.min_max(tab.column("cell")).as_py()
         return pa.record_batch(
             {
@@ -807,20 +750,12 @@ def _decode_tasks_factory(paths: list[str], tasks: list[list[tuple[int, int, int
     """Decode kernel over task indexes (column ``id``, as ``spark.range``
     yields them): task ``i`` decodes the blobs ``tasks[i]``, each a
     ``(file index into paths, offset, size)`` in file order, through
-    ``_decode_partition``."""
+    ``_decode_blobs``."""
 
     def _decode_tasks(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for batch in batches:
             for i in batch.column("id").to_pylist():
-                blobs = tasks[i]
-                manifest = pa.record_batch(
-                    {
-                        "path": pa.array([paths[k] for k, _, _ in blobs], pa.string()),
-                        "offset": pa.array([off for _, off, _ in blobs], pa.int64()),
-                        "size": pa.array([size for _, _, size in blobs], pa.int64()),
-                    }
-                )
-                yield from _decode_partition(iter([manifest]))
+                yield from _decode_blobs((paths[k], off, size) for k, off, size in tasks[i])
 
     return _decode_tasks
 

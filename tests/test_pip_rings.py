@@ -15,19 +15,9 @@ from osm_pbf_spark.operators.spatial_join import (
     Polygon,
     pip_join,
     pip_join_rings,
+    rings_frame,
     rings_from_closed_ways,
 )
-
-
-def _rings_df(spark, polygons):
-    rows = [
-        (p.poly_id, i, [(float(la), float(lo)) for la, lo in ring])
-        for p in polygons
-        for i, ring in enumerate(p.rings)
-    ]
-    return spark.createDataFrame(
-        rows, "poly_id string, ring_idx int, pts array<struct<lat: double, lon: double>>"
-    )
 
 
 def test_rings_matches_broadcast_pip(spark):
@@ -51,7 +41,7 @@ def test_rings_matches_broadcast_pip(spark):
     }
     got = {
         (r["doc_id"], r["poly_id"])
-        for r in pip_join_rings(spark, pts, _rings_df(spark, polys), level=8).collect()
+        for r in pip_join_rings(spark, pts, rings_frame(spark, polys), level=8).collect()
     }
     assert got == want and len(got) > 0
 
@@ -154,7 +144,7 @@ def test_rings_auto_level_mixed_sizes(spark):
         for i, (la, lo) in enumerate([(-30.0, -60.0), (-12.0, 40.0), (55.0, 100.0)])
     ]
     polys = [Polygon("huge", [huge])] + small
-    rings = _rings_df(spark, polys)
+    rings = rings_frame(spark, polys)
 
     cover = rings_cell_cover(rings, "auto").collect()
     by_poly: dict[str, int] = {}
@@ -180,6 +170,6 @@ def test_rings_auto_level_mixed_sizes(spark):
     }
     got = {
         (r["doc_id"], r["poly_id"])
-        for r in pip_join_rings(spark, pts, _rings_df(spark, polys), level="auto").collect()
+        for r in pip_join_rings(spark, pts, rings_frame(spark, polys), level="auto").collect()
     }
     assert got == want and len(got) > 0

@@ -47,6 +47,29 @@ def test_pip_join_broadcasts_cover_and_limits_python_to_boundary(spark):
     assert "Union" in plan
 
 
+def test_pip_shuffle_runs_one_cover_and_one_refine(spark):
+    """The shuffle strategy runs pip_join_rings' plan: every cover level
+    in ONE join, the Python cover once (shared by the full and boundary
+    branches) and one Arrow refine, with no pickled-pandas stage."""
+    from osm_pbf_spark.operators.spatial_join import pick_cover_level
+    from tests.test_spatial_join import make_points, make_polygons
+
+    polys = make_polygons()
+    assert sorted({pick_cover_level(p) for p in polys}) == [6, 8, 9, 16]
+    ids, pts = make_points(200, seed=1)
+    df = spark.createDataFrame(
+        [(i, float(a), float(b)) for i, (a, b) in zip(ids, pts)],
+        "doc_id string, lat double, lon double",
+    )
+    out = pip_join(spark, df, polys, level="auto", strategy="shuffle")
+    assert out.collect()
+    final = _plan(out).split("== Initial Plan ==")[0]
+    assert "MapInPandas" not in final, final
+    assert final.count("MapInArrow") <= 2, final
+    assert final.count("MapInArrow _cover") == 1, final
+    assert final.count("MapInArrow _refine") == 1, final
+
+
 def test_pyramid_rollup_is_two_aggregations(spark):
     pt = assign_point_tiles(_points(spark), zoom=8, scheme="linear")
     plan = _plan(tile_pyramid_rollup(pt, zoom=8, min_zoom=4))

@@ -81,19 +81,64 @@ def test_cover_full_cells_exist(spark):
     assert (~sq["full"]).sum() > 0  # and boundary partial cells
 
 
-def test_pip_join_shuffle_strategy_same_result(spark):
+@pytest.mark.parametrize("level", [8, "auto"])
+def test_pip_join_shuffle_strategy_same_result(spark, level):
     polys = make_polygons()[:3]
     ids, pts = make_points(500, seed=11)
     df = spark.createDataFrame(
         [(i, float(a), float(b)) for i, (a, b) in zip(ids, pts)],
         "doc_id string, lat double, lon double",
     )
-    a = {(r["doc_id"], r["poly_id"]) for r in pip_join(spark, df, polys, 8).collect()}
+    a = {(r["doc_id"], r["poly_id"]) for r in pip_join(spark, df, polys, level).collect()}
     b = {
         (r["doc_id"], r["poly_id"])
-        for r in pip_join(spark, df, polys, 8, strategy="shuffle").collect()
+        for r in pip_join(spark, df, polys, level, strategy="shuffle").collect()
     }
-    assert a == b
+    assert a == b and len(a) > 0
+
+
+def test_pip_join_points_with_cell_column(spark):
+    """A point frame read back from the engine's own table carries a
+    ``cell`` column; every join route replaces it instead of adding a
+    second one, and returns the broadcast level=8 rows."""
+    from pyspark.sql import functions as F
+
+    from osm_pbf_spark.operators.spatial_join import pip_join_rings, rings_frame
+
+    polys = make_polygons()[:1]
+    ids, pts = make_points(300, seed=5)
+    plain = spark.createDataFrame(
+        [(i, float(a), float(b)) for i, (a, b) in zip(ids, pts)],
+        "doc_id string, lat double, lon double",
+    )
+    df = plain.withColumn("cell", F.lit(-1).cast("long"))
+    want = sorted(pip_join(spark, plain, polys, level=8).collect())
+    assert len(want) > 0
+    for out in (
+        pip_join(spark, df, polys, level=8),
+        pip_join(spark, df, polys, level="auto"),
+        pip_join(spark, df, polys, level="auto", strategy="shuffle"),
+        pip_join_rings(spark, df, rings_frame(spark, polys), level="auto"),
+    ):
+        assert sorted(out.collect()) == want
+
+
+def test_pip_join_shuffle_caches_nothing(spark):
+    """The shuffle route and pip_join_rings leave no persisted RDD
+    behind: the cover runs inside the join plan, not from a cache."""
+    from osm_pbf_spark.operators.spatial_join import pip_join_rings, rings_frame
+
+    polys = make_polygons()
+    ids, pts = make_points(300, seed=3)
+    df = spark.createDataFrame(
+        [(i, float(a), float(b)) for i, (a, b) in zip(ids, pts)],
+        "doc_id string, lat double, lon double",
+    )
+    jsc = spark.sparkContext._jsc
+    before = jsc.getPersistentRDDs().size()
+    pip_join(spark, df, polys, level="auto", strategy="shuffle").collect()
+    pip_join_rings(spark, df, rings_frame(spark, polys), level="auto").collect()
+    assert jsc.getPersistentRDDs().size() == before
 
 
 def test_pip_join_plan_is_broadcast(spark):
@@ -137,16 +182,17 @@ def test_pick_cover_level_monotone():
 
 
 def test_distributed_cover_matches_driver_cover(spark):
-    """polygon_cell_cover_dist must emit exactly the driver-side cover
-    rows, and the shuffle-strategy pip_join over a >2000-polygon set
-    (the distributed-cover regime) must match per-polygon brute PIP."""
+    """rings_cell_cover over a polygon list's rings frame must emit
+    exactly the driver-side cover rows, and the shuffle-strategy
+    pip_join over a >2000-polygon set must match per-polygon brute PIP."""
     import numpy as np
     import pandas as pd
 
     from osm_pbf_spark.operators.spatial_join import (
         pip_join,
         polygon_cell_cover,
-        polygon_cell_cover_dist,
+        rings_cell_cover,
+        rings_frame,
         Polygon,
     )
     from tests.oracle_geo import point_in_polygon
@@ -163,7 +209,7 @@ def test_distributed_cover_matches_driver_cover(spark):
 
     level = 7
     want = polygon_cell_cover(polys, level)
-    got = polygon_cell_cover_dist(spark, polys, level).toPandas()
+    got = rings_cell_cover(rings_frame(spark, polys), level).toPandas()
     key = ["cell", "poly_id", "full"]
     assert (
         sorted(map(tuple, got[key].itertuples(index=False)))

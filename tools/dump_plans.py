@@ -16,6 +16,9 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 QUERIES = [
     ("q_pip_join", "two-stage PIP: broadcast multi-level cell cover -> "
      "full-cell JVM bypass -> ONE boundary-band Python stage"),
+    ("q_pip_shuffle", "shuffle-strategy PIP: the pip_join_rings plan fed a "
+     "driver polygon list -> ONE salted shuffle join, cover and Arrow "
+     "refine once each"),
     ("q01_pricing", "TPC-H 1: pushed filter + partial agg, pure codegen"),
     ("q_minhash_pairs", "MinHash LSH: exact-collapse -> band self-join "
      "(shuffle-pinned, ReuseExchange) -> single verify stage"),
