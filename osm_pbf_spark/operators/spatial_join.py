@@ -329,8 +329,11 @@ def rings_frame(spark: SparkSession, polygons: list[Polygon]) -> DataFrame:
 
 def _grouped_rings(rings_df: DataFrame) -> DataFrame:
     """(poly_id, ring_idx, pts) -> one row per polygon with its rings
-    sorted by ring_idx (ring 0 outer, rest holes)."""
-    return rings_df.groupBy("poly_id").agg(
+    sorted by ring_idx (ring 0 outer, rest holes). Rings without a
+    poly_id are dropped here, the same filter Catalyst infers for the
+    refine's poly_id join, so the cover and the refine share ONE rings
+    aggregation (ReuseExchange) instead of running it twice."""
+    return rings_df.filter(F.col("poly_id").isNotNull()).groupBy("poly_id").agg(
         F.sort_array(F.collect_list(F.struct("ring_idx", "pts"))).alias("_rings")
     )
 

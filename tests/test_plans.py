@@ -50,7 +50,8 @@ def test_pip_join_broadcasts_cover_and_limits_python_to_boundary(spark):
 def test_pip_shuffle_runs_one_cover_and_one_refine(spark):
     """The shuffle strategy runs pip_join_rings' plan: every cover level
     in ONE join, the Python cover once (shared by the full and boundary
-    branches) and one Arrow refine, with no pickled-pandas stage."""
+    branches), one Arrow refine and one rings aggregation (shared by
+    the cover and the refine), with no pickled-pandas stage."""
     from osm_pbf_spark.operators.spatial_join import pick_cover_level
     from tests.test_spatial_join import make_points, make_polygons
 
@@ -68,6 +69,7 @@ def test_pip_shuffle_runs_one_cover_and_one_refine(spark):
     assert final.count("MapInArrow") <= 2, final
     assert final.count("MapInArrow _cover") == 1, final
     assert final.count("MapInArrow _refine") == 1, final
+    assert final.count("Scan ExistingRDD[poly_id") == 1, final
 
 
 def test_pyramid_rollup_is_two_aggregations(spark):
