@@ -15,16 +15,19 @@ granularity, not the task count.
 from __future__ import annotations
 
 import hashlib
+import json
 import os
 import shutil
 import time
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import from_arrow_schema
 
 from ..sink.iceberg_like import IcebergLikeSink
 from ..sources.pbf_source import (
     FILE_REPORT_SPARK_SCHEMA,
     _decode_render_write_bins_factory,
+    _ingest_arrow_schema,
     _lpt,
     _scan_one,
 )
@@ -184,6 +187,8 @@ def _ingest_wave(
         FILE_REPORT_SPARK_SCHEMA,
     ).collect()
     wall_s = time.monotonic() - t0
+    # the manifests carry the files' schema, so a read opens no footer
+    schema = json.loads(from_arrow_schema(_ingest_arrow_schema()).json())
     by_split: dict[str, list[dict]] = {sid: [] for sid, _ in wave}
     for r in reports:
         by_split[r["split_id"]].append(r.asDict())
@@ -194,6 +199,7 @@ def _ingest_wave(
             lineage=lineage[sid],
             fail_before_commit=(sid == fail_before_split),
             wall_s=wall_s,  # the wave's job time, shared by its splits
+            schema=schema,
         )
 
 

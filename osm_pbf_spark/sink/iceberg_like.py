@@ -18,9 +18,17 @@ Protocol (exactly-once restart semantics, BASELINE.json:6,14):
 
 - the job is divided into named SPLITS (e.g. PBF blob ranges). A split
   commits by writing its parquet files THEN atomically renaming its
-  manifest JSON into place (os.replace — atomic on POSIX).
-- a manifest records the split's files + row/byte counts + LINEAGE
-  (input description, operator config, engine version) + METRICS.
+  manifest JSON into place.
+- every metadata file (split manifests, the manifest list, the snapshot
+  and its history copy, tags, branches) is written the same one way:
+  a temp file beside the target, ``fsync`` of the file, rename over the
+  target (atomic on POSIX), ``fsync`` of the directory. A crash leaves
+  the old file or the new one, and a returned commit survives power
+  loss.
+- a manifest records the split's files + row/byte counts + SCHEMA
+  (every writer records it, so a read opens no parquet footer) +
+  LINEAGE (input description, operator config, engine version) +
+  METRICS.
 - readers list committed manifests and read ONLY the files they name:
   data orphaned by a crash mid-split is invisible, so a restart that
   reprocesses the split cannot double-count.
@@ -64,6 +72,26 @@ from .. import __version__
 _MANIFEST_DIR = "_manifests"
 _SNAP_DIR = "_snapshots"
 _EQ_DELETES = "equality_deletes"
+_REF_FILES = {"tag": "tags.json", "branch": "branches.json"}
+
+
+def _write_json(path: str, obj, indent: int | None = 1) -> None:
+    """THE metadata write: ``obj`` as JSON into a temp file beside
+    ``path``, fsynced, renamed over ``path``, then the directory
+    fsynced so the rename itself is durable. Readers see the old file
+    or the new one, never a torn one."""
+    d, name = os.path.split(path)
+    tmp = os.path.join(d, f".{name}.tmp-{uuid.uuid4().hex}")
+    with open(tmp, "w") as f:
+        json.dump(obj, f, indent=indent, sort_keys=True)
+        f.flush()
+        os.fsync(f.fileno())
+    os.replace(tmp, path)
+    fd = os.open(d, os.O_RDONLY)
+    try:
+        os.fsync(fd)
+    finally:
+        os.close(fd)
 
 
 def _stat_jsonable(v):
@@ -264,14 +292,7 @@ class IcebergLikeSink:
             else:
                 spark.conf.set(_ADV, old_adv)
 
-        files = []
-        n_bytes = 0
-        for dirpath, _dirnames, filenames in os.walk(split_dir):
-            for fn in filenames:
-                if fn.endswith(".parquet"):
-                    full = os.path.join(dirpath, fn)
-                    files.append(os.path.relpath(full, self.root))
-                    n_bytes += os.path.getsize(full)
+        files, n_bytes = self._split_files(split_dir)
         import pyarrow.parquet as pq
         from concurrent.futures import ThreadPoolExecutor
 
@@ -343,21 +364,18 @@ class IcebergLikeSink:
                     for part in rel.split(os.sep):
                         if part.startswith("_bucket="):
                             file_buckets[rel] = int(part.split("=", 1)[1])
-        manifest = {
-            "split_id": split_id,
-            "files": sorted(files),
+        entry = {
+            "files": files,
             # per-file [min, max] of stats_col — Iceberg-style file
             # metrics enabling manifest-level pruning in read()
-            "file_stats": {k: file_stats[k] for k in sorted(file_stats)},
+            "file_stats": file_stats,
             # per-file [min, max] of the EXTRA stats_cols (multi-dim
             # pruning; pairs with the Z-order compaction layout)
-            "file_stats_multi": {
-                k: file_stats_multi[k] for k in sorted(file_stats_multi)
-            },
+            "file_stats_multi": file_stats_multi,
             # per-file Bloom words per bloom_cols column (point-lookup
             # file pruning via read(bloom_keys=...)); the spec rides the
             # manifest so readers probe with the words' own parameters
-            "file_blooms": {k: file_blooms[k] for k in sorted(file_blooms)},
+            "file_blooms": file_blooms,
             "bloom_spec": (
                 {
                     "cols": list(self.bloom_cols),
@@ -367,10 +385,9 @@ class IcebergLikeSink:
                 if self.bloom_cols
                 else None
             ),
-            "stats_col": self.stats_col,
             # hidden-partitioning layout: per-file bucket id + the
             # transform spec (bucket pruning in read(bucket_keys=...))
-            "file_buckets": {k: file_buckets[k] for k in sorted(file_buckets)},
+            "file_buckets": file_buckets,
             "bucket_by": list(self.bucket_by) if self.bucket_by else None,
             # the split's Spark schema — metadata-carried so the read
             # path can UNION schemas across splits (add-column
@@ -378,21 +395,50 @@ class IcebergLikeSink:
             "schema": table_schema,
             "n_rows": n_rows,
             "n_bytes": n_bytes,
-            "partition_by": [],
             "replaces": sorted(replaces or []),
-            "lineage": {
-                "engine_version": __version__,
-                **(lineage or {}),
-            },
-            "metrics": {"write_wall_s": round(time.monotonic() - t0, 3)},
+        }
+        return self._commit(
+            split_id, entry, lineage, time.monotonic() - t0, fail_before_commit
+        )
+
+    def _split_files(self, split_dir: str) -> tuple[list[str], int]:
+        """(sorted table-relative parquet paths, total bytes) of one
+        split's data directory."""
+        files = []
+        n_bytes = 0
+        for dirpath, _dirnames, filenames in os.walk(split_dir):
+            for fn in filenames:
+                if fn.endswith(".parquet"):
+                    full = os.path.join(dirpath, fn)
+                    files.append(os.path.relpath(full, self.root))
+                    n_bytes += os.path.getsize(full)
+        return sorted(files), n_bytes
+
+    def _commit(
+        self,
+        split_id: str,
+        entry: dict,
+        lineage: dict | None,
+        wall_s: float | None,
+        fail_before_commit: bool,
+    ) -> dict:
+        """THE split commit: complete a writer's own manifest fields
+        (``entry``) with those every manifest shares, then rename the
+        manifest into place — the moment the split's files become
+        visible."""
+        manifest = {
+            "split_id": split_id,
+            "stats_col": self.stats_col,
+            "partition_by": [],
+            "replaces": [],
+            **entry,
+            "lineage": {"engine_version": __version__, **(lineage or {})},
+            "metrics": {"write_wall_s": None if wall_s is None else round(wall_s, 3)},
             "committed_at_unix": int(time.time()),
         }
         if fail_before_commit:
             raise RuntimeError(f"injected failure before commit of split {split_id}")
-        tmp = self._manifest_path(split_id) + f".tmp-{uuid.uuid4().hex}"
-        with open(tmp, "w") as f:
-            json.dump(manifest, f, indent=1, sort_keys=True)
-        os.replace(tmp, self._manifest_path(split_id))  # THE atomic commit
+        _write_json(self._manifest_path(split_id), manifest)
         return manifest
 
     def commit_reported_split(
@@ -411,12 +457,11 @@ class IcebergLikeSink:
         leave invisible orphans (Spark returns rows only from the
         winning attempt), so exactly-once semantics are unchanged. The
         driver re-checks each reported file's existence and size before
-        committing."""
+        committing. ``schema`` is the files' Spark schema as JSON (the
+        ingest passes the one its kernel writes)."""
         if split_id in self.completed_splits():
             return None
-        files: list[str] = []
         file_stats: dict[str, dict] = {}
-        n_rows = 0
         n_bytes = 0
         for r in reports:
             full = r["path"]
@@ -424,34 +469,18 @@ class IcebergLikeSink:
             if size != r["n_bytes"]:
                 raise OSError(f"reported size mismatch for {full}: {size} != {r['n_bytes']}")
             rel = os.path.relpath(full, self.root)
-            files.append(rel)
             file_stats[rel] = {"rows": r["n_rows"], "min": r["cell_min"], "max": r["cell_max"]}
-            n_rows += r["n_rows"]
             n_bytes += size
-        manifest = {
-            "split_id": split_id,
-            "files": sorted(files),
-            "file_stats": {k: file_stats[k] for k in sorted(file_stats)},
-            "stats_col": self.stats_col,
-            "schema": schema,  # optional (worker-written files): None
-            # falls back to a mergeSchema footer read
-            "n_rows": n_rows,
+        entry = {
+            "files": sorted(file_stats),
+            "file_stats": file_stats,
+            # only manifests committed before every writer recorded a
+            # schema lack one; those reads fall back to a footer read
+            "schema": schema,
+            "n_rows": sum(r["n_rows"] for r in reports),
             "n_bytes": n_bytes,
-            "partition_by": [],
-            "lineage": {
-                "engine_version": __version__,
-                **(lineage or {}),
-            },
-            "metrics": {"write_wall_s": round(wall_s, 3) if wall_s is not None else None},
-            "committed_at_unix": int(time.time()),
         }
-        if fail_before_commit:
-            raise RuntimeError(f"injected failure before commit of split {split_id}")
-        tmp = self._manifest_path(split_id) + f".tmp-{uuid.uuid4().hex}"
-        with open(tmp, "w") as f:
-            json.dump(manifest, f, indent=1, sort_keys=True)
-        os.replace(tmp, self._manifest_path(split_id))  # THE atomic commit
-        return manifest
+        return self._commit(split_id, entry, lineage, wall_s, fail_before_commit)
 
     def delete_keys(
         self,
@@ -497,43 +526,22 @@ class IcebergLikeSink:
         split_dir = os.path.join(self.root, "data", f"split={sid}")
         slim = keys.select(*equality_cols).dropDuplicates(equality_cols)
         slim.write.mode("overwrite").parquet(split_dir)
-        files = []
-        n_bytes = 0
-        for dirpath, _dirnames, filenames in os.walk(split_dir):
-            for fn in filenames:
-                if fn.endswith(".parquet"):
-                    full = os.path.join(dirpath, fn)
-                    files.append(os.path.relpath(full, self.root))
-                    n_bytes += os.path.getsize(full)
+        files, n_bytes = self._split_files(split_dir)
         import pyarrow.parquet as pq
 
-        n_rows = sum(
-            pq.read_metadata(os.path.join(self.root, rel)).num_rows for rel in files
-        )
-        manifest = {
-            "split_id": sid,
+        entry = {
             "kind": _EQ_DELETES,
             "equality_cols": list(equality_cols),
             "applies_to": sorted(data_e),
-            "files": sorted(files),
+            "files": files,
             "file_stats": {},
-            "stats_col": self.stats_col,
             "schema": json.loads(slim.schema.json()),
-            "n_rows": n_rows,
+            "n_rows": sum(
+                pq.read_metadata(os.path.join(self.root, rel)).num_rows for rel in files
+            ),
             "n_bytes": n_bytes,
-            "partition_by": [],
-            "replaces": [],
-            "lineage": {"engine_version": __version__, **(lineage or {})},
-            "metrics": {"write_wall_s": round(time.monotonic() - t0, 3)},
-            "committed_at_unix": int(time.time()),
         }
-        if fail_before_commit:
-            raise RuntimeError(f"injected failure before commit of delete split {sid}")
-        tmp = self._manifest_path(sid) + f".tmp-{uuid.uuid4().hex}"
-        with open(tmp, "w") as f:
-            json.dump(manifest, f, indent=1, sort_keys=True)
-        os.replace(tmp, self._manifest_path(sid))  # THE atomic commit
-        return manifest
+        return self._commit(sid, entry, lineage, time.monotonic() - t0, fail_before_commit)
 
     def delete_where(
         self,
@@ -654,10 +662,7 @@ class IcebergLikeSink:
             "replaced": sorted(replaced & set(manifests)),
         }
         mlist_name = f"manifest-list-{snap_id}.json"
-        tmp = os.path.join(self.root, f".mlist.tmp-{uuid.uuid4().hex}")
-        with open(tmp, "w") as f:
-            json.dump(mlist, f, sort_keys=True)
-        os.replace(tmp, os.path.join(self.root, mlist_name))
+        _write_json(os.path.join(self.root, mlist_name), mlist, indent=None)
         snap = {
             "snapshot_id": snap_id,
             "sequence_number": (prev or {}).get("sequence_number", 0) + 1,
@@ -678,15 +683,11 @@ class IcebergLikeSink:
             "engine_version": __version__,
             "committed_at_unix": int(time.time()),
         }
-        payload = json.dumps(snap, indent=1, sort_keys=True)
         hist = os.path.join(
             self.root, _SNAP_DIR, f"snap-{snap['sequence_number']:06d}-{snap_id}.json"
         )
         for dest in (hist, os.path.join(self.root, "snapshot.json")):
-            tmp = os.path.join(self.root, f".snapshot.tmp-{uuid.uuid4().hex}")
-            with open(tmp, "w") as f:
-                f.write(payload)
-            os.replace(tmp, dest)
+            _write_json(dest, snap)
         return snap
 
     def vacuum_orphans(self, min_age_s: float = 0.0) -> dict:
@@ -754,18 +755,58 @@ class IcebergLikeSink:
                     continue
         return {"deleted_files": deleted, "freed_bytes": freed}
 
-    # ---- named refs (Iceberg tags) --------------------------------------
+    # ---- named refs (Iceberg tags and branches) -------------------------
 
-    def _tags_path(self) -> str:
-        return os.path.join(self.root, "tags.json")
-
-    def tags(self) -> dict:
-        """Name -> snapshot_id map of all recorded tags."""
-        p = self._tags_path()
+    def _refs(self, kind: str) -> dict:
+        """Name -> snapshot_id map of one ref store (``kind`` is "tag"
+        or "branch")."""
+        p = os.path.join(self.root, _REF_FILES[kind])
         if not os.path.exists(p):
             return {}
         with open(p) as f:
             return json.load(f)
+
+    def _set_ref(self, kind: str, name: str, snapshot_id: str | None) -> dict:
+        """Point ref ``name`` at ``snapshot_id`` (None drops it) with one
+        atomic rewrite of its store. Returns {name: snapshot_id}."""
+        cur = self._refs(kind)
+        if snapshot_id is None:
+            cur.pop(name, None)
+        else:
+            cur[name] = snapshot_id
+        _write_json(os.path.join(self.root, _REF_FILES[kind]), cur)
+        return {name: snapshot_id}
+
+    def _ref_snapshot(self, ref: int | str | None) -> dict:
+        """The snapshot a ``ref`` argument names: a retained snapshot_id
+        or sequence number, or the current snapshot for None."""
+        if ref is not None:
+            return self._snapshot_entries(ref)[0]
+        snap = self.current_snapshot()
+        if snap is None:
+            raise ValueError("no snapshot yet — commit_snapshot first")
+        return snap
+
+    def _ref_id(self, kind: str, name: str) -> str:
+        """The snapshot_id ref ``name`` points at; KeyError if unknown."""
+        cur = self._refs(kind)
+        if name not in cur:
+            raise KeyError(f"unknown {kind} {name!r}; have {sorted(cur)}")
+        return cur[name]
+
+    def _new_ref(self, kind: str, name: str, ref, hint: str) -> dict:
+        """Create ref ``name`` at ``ref``'s snapshot; a bad or taken
+        name raises ValueError (``hint`` says what to do instead)."""
+        if not name or "/" in name:
+            raise ValueError(f"invalid {kind} name {name!r}")
+        cur = self._refs(kind)
+        if name in cur:
+            raise ValueError(f"{kind} {name!r} already exists at {cur[name]!r} — {hint}")
+        return self._set_ref(kind, name, self._ref_snapshot(ref)["snapshot_id"])
+
+    def tags(self) -> dict:
+        """Name -> snapshot_id map of all recorded tags."""
+        return self._refs("tag")
 
     def tag_snapshot(self, name: str, ref: int | str | None = None) -> dict:
         """Record an immutable NAMED REF (Iceberg tag) to a snapshot
@@ -776,45 +817,15 @@ class IcebergLikeSink:
         name raises (delete_tag first, deliberately two steps). The
         tagged snapshot is protected from expire_snapshots.
 
-        Returns {name: snapshot_id}. Atomic single-file update (the
-        snapshot.json os.replace protocol)."""
-        if not name or "/" in name:
-            raise ValueError(f"invalid tag name {name!r}")
-        cur = self.tags()
-        if name in cur:
-            raise ValueError(
-                f"tag {name!r} already points at {cur[name]!r} — tags are "
-                "immutable; delete_tag first if you really mean to move it"
-            )
-        if ref is None:
-            snap = self.current_snapshot()
-            if snap is None:
-                raise ValueError("no snapshot to tag — commit_snapshot first")
-        else:
-            snap, _ = self._snapshot_entries(ref)
-        cur[name] = snap["snapshot_id"]
-        tmp = os.path.join(self.root, f".tags.tmp-{uuid.uuid4().hex}")
-        with open(tmp, "w") as f:
-            json.dump(cur, f, indent=1, sort_keys=True)
-        os.replace(tmp, self._tags_path())
-        return {name: snap["snapshot_id"]}
-
-    def _branches_path(self) -> str:
-        return os.path.join(self.root, "branches.json")
+        Returns {name: snapshot_id}. Atomic single-file update."""
+        return self._new_ref(
+            "tag", name, ref,
+            "tags are immutable; delete_tag first if you really mean to move it",
+        )
 
     def branches(self) -> dict:
         """Name -> snapshot_id map of all branches (movable refs)."""
-        p = self._branches_path()
-        if not os.path.exists(p):
-            return {}
-        with open(p) as f:
-            return json.load(f)
-
-    def _write_branches(self, cur: dict) -> None:
-        tmp = os.path.join(self.root, f".branches.tmp-{uuid.uuid4().hex}")
-        with open(tmp, "w") as f:
-            json.dump(cur, f, indent=1, sort_keys=True)
-        os.replace(tmp, self._branches_path())
+        return self._refs("branch")
 
     def branch_snapshot(self, name: str, ref: int | str | None = None) -> dict:
         """Create a BRANCH (r5) — the MOVABLE sibling of tags (Iceberg
@@ -826,23 +837,7 @@ class IcebergLikeSink:
         main, audit through the branch read, then
         :meth:`publish_branch` (rollback_to is roll-forward-capable)
         to make main adopt it. Returns {name: snapshot_id}."""
-        if not name or "/" in name:
-            raise ValueError(f"invalid branch name {name!r}")
-        cur = self.branches()
-        if name in cur:
-            raise ValueError(
-                f"branch {name!r} already exists at {cur[name]!r} — "
-                "advance_branch moves it"
-            )
-        if ref is None:
-            snap = self.current_snapshot()
-            if snap is None:
-                raise ValueError("no snapshot to branch — commit_snapshot first")
-        else:
-            snap, _ = self._snapshot_entries(ref)
-        cur[name] = snap["snapshot_id"]
-        self._write_branches(cur)
-        return {name: snap["snapshot_id"]}
+        return self._new_ref("branch", name, ref, "advance_branch moves it")
 
     def advance_branch(self, name: str, ref: int | str | None = None) -> dict:
         """Move a branch FORWARD to a newer retained snapshot (default:
@@ -850,67 +845,39 @@ class IcebergLikeSink:
         number must be >= the branch's current position (the Iceberg
         fast_forward contract); rewinding a branch is deliberately not
         offered (delete + re-create states the intent loudly)."""
-        cur = self.branches()
-        if name not in cur:
-            raise KeyError(f"unknown branch {name!r}; have {sorted(cur)}")
-        if ref is None:
-            snap = self.current_snapshot()
-            if snap is None:
-                raise ValueError("no current snapshot to advance to")
-        else:
-            snap, _ = self._snapshot_entries(ref)
-        old, _ = self._snapshot_entries(cur[name])
+        old = self._ref_snapshot(self._ref_id("branch", name))
+        snap = self._ref_snapshot(ref)
         if snap.get("sequence_number", 0) < old.get("sequence_number", 0):
             raise ValueError(
                 f"advance_branch is fast-forward-only: target seq "
                 f"{snap.get('sequence_number')} < branch seq "
                 f"{old.get('sequence_number')}"
             )
-        cur[name] = snap["snapshot_id"]
-        self._write_branches(cur)
-        return {name: snap["snapshot_id"]}
+        return self._set_ref("branch", name, snap["snapshot_id"])
 
     def read_branch(self, spark: SparkSession, name: str, **kw) -> DataFrame:
         """Read through a branch ref (read_snapshot by branch)."""
-        cur = self.branches()
-        if name not in cur:
-            raise KeyError(f"unknown branch {name!r}; have {sorted(cur)}")
-        return self.read_snapshot(spark, cur[name], **kw)
+        return self.read_snapshot(spark, self._ref_id("branch", name), **kw)
 
     def publish_branch(self, name: str) -> dict:
         """Make MAIN adopt the branch's snapshot (the WAP 'publish'
         step) — rollback_to handles both roll-back and roll-forward,
         restoring atticed manifests as needed. Returns the new main
         snapshot."""
-        cur = self.branches()
-        if name not in cur:
-            raise KeyError(f"unknown branch {name!r}; have {sorted(cur)}")
-        return self.rollback_to(cur[name])
+        return self.rollback_to(self._ref_id("branch", name))
 
     def delete_branch(self, name: str) -> None:
-        cur = self.branches()
-        if name not in cur:
-            raise KeyError(f"unknown branch {name!r}")
-        del cur[name]
-        self._write_branches(cur)
+        self._ref_id("branch", name)
+        self._set_ref("branch", name, None)
 
     def delete_tag(self, name: str) -> None:
-        cur = self.tags()
-        if name not in cur:
-            raise KeyError(f"unknown tag {name!r}")
-        del cur[name]
-        tmp = os.path.join(self.root, f".tags.tmp-{uuid.uuid4().hex}")
-        with open(tmp, "w") as f:
-            json.dump(cur, f, indent=1, sort_keys=True)
-        os.replace(tmp, self._tags_path())
+        self._ref_id("tag", name)
+        self._set_ref("tag", name, None)
 
     def read_tag(self, spark: SparkSession, name: str, **kw) -> DataFrame:
         """Time-travel read through a named ref (read_snapshot by
         tag). Raises KeyError for unknown tags."""
-        tags = self.tags()
-        if name not in tags:
-            raise KeyError(f"unknown tag {name!r}; have {sorted(tags)}")
-        return self.read_snapshot(spark, tags[name], **kw)
+        return self.read_snapshot(spark, self._ref_id("tag", name), **kw)
 
     def current_snapshot(self) -> dict | None:
         p = os.path.join(self.root, "snapshot.json")
@@ -1111,9 +1078,10 @@ class IcebergLikeSink:
         Iceberg add-column semantic, with zero parquet footers opened.
         Type CHANGES and renames are refused loudly (safe evolution
         needs Iceberg's field-id mapping, out of scope). Returns None
-        when any split lacks a recorded schema (legacy / worker-written
-        manifests) — callers then fall back to a mergeSchema footer
-        read, which is correct but O(files) driver work."""
+        when any split lacks a recorded schema, which only manifests
+        committed before every writer recorded one do — callers then
+        fall back to a mergeSchema footer read, which is correct but
+        runs a Spark job over O(files) footers."""
         from pyspark.sql.types import StructType
 
         fields: dict[str, dict] = {}

@@ -599,6 +599,17 @@ FILE_REPORT_SPARK_SCHEMA = T.StructType(
     ]
 )
 
+
+def _ingest_arrow_schema() -> pa.Schema:
+    """Arrow schema of the ingest's data files: the rendered docs plus
+    their ``cell`` and ``cell_prefix``."""
+    from ..operators.docrender import DOC_ARROW_SCHEMA
+
+    return DOC_ARROW_SCHEMA.append(pa.field("cell", pa.int64())).append(
+        pa.field("cell_prefix", pa.int64())
+    )
+
+
 def _decode_render_write_bins_factory(
     cell_level: int,
     table_root: str,
@@ -632,11 +643,9 @@ def _decode_render_write_bins_factory(
     import pyarrow.parquet as pq
 
     from ..functions import cells as C
-    from ..operators.docrender import DOC_ARROW_SCHEMA, _render_batch
+    from ..operators.docrender import _render_batch
 
-    schema = DOC_ARROW_SCHEMA.append(pa.field("cell", pa.int64())).append(
-        pa.field("cell_prefix", pa.int64())
-    )
+    schema = _ingest_arrow_schema()
     prefix_shift = np.int64(2 * (cell_level - 4))
 
     def _cell_batch(ent: pa.RecordBatch) -> pa.RecordBatch:

@@ -1,0 +1,125 @@
+"""The sink's one commit path: every metadata file is renamed into place
+only after its temp file is fsynced, and its directory is fsynced after
+the rename; the ingest records its files' schema, so reading an ingest
+table opens no parquet footer, while manifests without a schema still
+read through the footer fallback."""
+
+from __future__ import annotations
+
+import json
+import os
+import shutil
+import stat
+
+import pyarrow as pa
+import pyarrow.parquet as pq
+
+from osm_pbf_spark.plans.ingest import ingest_pbf
+from osm_pbf_spark.sink.iceberg_like import IcebergLikeSink
+
+
+def _record_fsync_and_replace(monkeypatch) -> list[tuple]:
+    """Patch os.fsync/os.replace to log ("fsync", inode, is_dir) and
+    ("replace", source inode, target dir inode, target name)."""
+    events: list[tuple] = []
+    real_fsync, real_replace = os.fsync, os.replace
+
+    def fsync(fd):
+        st = os.fstat(fd)
+        events.append(("fsync", st.st_ino, stat.S_ISDIR(st.st_mode)))
+        return real_fsync(fd)
+
+    def replace(src, dst):
+        dst_dir = os.path.dirname(os.path.abspath(dst))
+        events.append(
+            ("replace", os.stat(src).st_ino, os.stat(dst_dir).st_ino, os.path.basename(dst))
+        )
+        return real_replace(src, dst)
+
+    monkeypatch.setattr(os, "fsync", fsync)
+    monkeypatch.setattr(os, "replace", replace)
+    return events
+
+
+def test_every_metadata_rename_is_fsynced(tmp_path, monkeypatch):
+    root = str(tmp_path / "t")
+    sink = IcebergLikeSink(root)
+    path = os.path.join(root, "data", "split=a", "part-0.parquet")
+    os.makedirs(os.path.dirname(path))
+    pq.write_table(pa.table({"cell": pa.array([1, 5], pa.int64())}), path)
+    report = {"path": path, "n_rows": 2, "n_bytes": os.path.getsize(path),
+              "cell_min": 1, "cell_max": 5}
+    events = _record_fsync_and_replace(monkeypatch)
+    sink.commit_reported_split("a", [report])
+    snap = sink.commit_snapshot()
+    sink.tag_snapshot("cut")
+    sink.branch_snapshot("audit")
+
+    renames = [i for i, e in enumerate(events) if e[0] == "replace"]
+    assert sorted(events[i][3] for i in renames) == sorted(
+        [
+            "split-a.json",
+            snap["manifest_list"],
+            f"snap-000001-{snap['snapshot_id']}.json",
+            "snapshot.json",
+            "tags.json",
+            "branches.json",
+        ]
+    )
+    bounds = [-1] + renames + [len(events)]
+    for k, i in enumerate(renames):
+        _, src_ino, dir_ino, name = events[i]
+        before = events[bounds[k] + 1 : i]
+        after = events[i + 1 : bounds[k + 2]]
+        assert ("fsync", src_ino, False) in before, f"{name} renamed before its fsync"
+        assert ("fsync", dir_ino, True) in after, f"{name}'s directory not fsynced"
+    assert not [n for _, _, fs in os.walk(root) for n in fs if ".tmp-" in n]
+
+
+def _read_jobs(spark, root: str, group: str) -> tuple[list, list]:
+    """(rows, Spark job ids) of building IcebergLikeSink(root).read under
+    a job group; the rows are collected outside the group."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, "sink read build")
+    try:
+        df = IcebergLikeSink(root).read(spark)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    jobs = list(sc.statusTracker().getJobIdsForGroup(group))
+    rows = sorted((r["doc_id"], r["cell"], str(r["spans"])) for r in df.collect())
+    return rows, jobs
+
+
+def test_ingest_table_read_opens_no_footer(spark, fixtures_dir, tmp_path):
+    root = str(tmp_path / "t")
+    sink = ingest_pbf(spark, f"{fixtures_dir}/multiblob.osm.pbf", root, blobs_per_split=1)
+    schemas = [sink._read_manifest(s)["schema"] for s in sorted(sink.completed_splits())]
+    assert schemas and all(s is not None for s in schemas)
+    rows, jobs = _read_jobs(spark, root, "sink-read-recorded-schema")
+    assert rows and jobs == []
+
+
+def test_manifest_without_schema_reads_same_rows(spark, fixtures_dir, tmp_path):
+    root = str(tmp_path / "t")
+    ingest_pbf(spark, f"{fixtures_dir}/multiblob.osm.pbf", root, blobs_per_split=1)
+    rows, _ = _read_jobs(spark, root, "sink-read-new")
+    old = str(tmp_path / "old")
+    shutil.copytree(root, old)
+    # a table committed before the ingest recorded its schema: no schema
+    # in the split's manifest, nor in the snapshot's manifest list
+    mpath = os.path.join(old, "_manifests", "split-000001.json")
+    with open(mpath) as f:
+        m = json.load(f)
+    del m["schema"]
+    with open(mpath, "w") as f:
+        json.dump(m, f)
+    with open(os.path.join(old, "snapshot.json")) as f:
+        lpath = os.path.join(old, json.load(f)["manifest_list"])
+    with open(lpath) as f:
+        mlist = json.load(f)
+    del mlist["entries"]["000001"]["schema"]
+    with open(lpath, "w") as f:
+        json.dump(mlist, f)
+    old_rows, jobs = _read_jobs(spark, old, "sink-read-no-schema")
+    assert jobs  # the mergeSchema footer read ran
+    assert old_rows == rows
