@@ -48,23 +48,6 @@ def point_to_tile_linear(lat: np.ndarray, lon: np.ndarray, z: int) -> tuple[np.n
     return x, y
 
 
-def tile_key(z: int, x: np.ndarray, y: np.ndarray) -> np.ndarray:
-    """Pack (z,x,y) into one int64: (z << 58) | (x << 29) | y (z<=29)."""
-    return (
-        (np.int64(z) << np.int64(58))
-        | (np.asarray(x, np.int64) << np.int64(29))
-        | np.asarray(y, np.int64)
-    )
-
-
-def tile_unkey(key: np.ndarray) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    k = np.asarray(key, np.int64)
-    z = k >> np.int64(58)
-    x = (k >> np.int64(29)) & np.int64((1 << 29) - 1)
-    y = k & np.int64((1 << 29) - 1)
-    return z, x, y
-
-
 def polygon_tile_cover_mercator(rings: list[np.ndarray], z: int) -> np.ndarray:
     """All (x, y) tiles at zoom z whose extent intersects the polygon.
 

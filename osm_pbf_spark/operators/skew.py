@@ -67,20 +67,3 @@ def replicate_for_salt(
     return df.withColumn(salt_col, F.explode(F.sequence(F.lit(0), k - 1))).withColumn(
         salt_col, F.col(salt_col).cast("int")
     )
-
-
-def salted_repartition(
-    df: DataFrame,
-    key_col: str,
-    unique_col: str,
-    threshold: int,
-    num_partitions: int | None = None,
-    salt_col: str = "salt",
-) -> DataFrame:
-    """Measure heavy hitters, salt, and repartition on (key, salt)."""
-    heavy = heavy_hitters(df, key_col, threshold)
-    salted = with_salt(df, key_col, heavy, unique_col, salt_col)
-    cols = [F.col(key_col), F.col(salt_col)]
-    return salted.repartition(num_partitions, *cols) if num_partitions else salted.repartition(
-        *cols
-    )

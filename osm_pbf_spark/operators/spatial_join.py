@@ -2,7 +2,8 @@
 
 Replaces the reference's in-process r-tree query (BASELINE.json:6):
 the r-tree's coarse MBR descent becomes a BROADCAST cell-cover equi-join
-and its exact leaf test becomes a batched-pandas-UDF refine.
+and its exact leaf test becomes one stateless Arrow refine
+(refine_in_polygons, one mapInArrow).
 
     stage 1 (coarse): points.withColumn("cell", ...)
                       .join(broadcast(cover), "cell")
@@ -27,6 +28,7 @@ from dataclasses import dataclass, field
 import numpy as np
 import pandas as pd
 import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -147,6 +149,8 @@ def _explode_multilevel_cells(
     because exploding an array of full encode trees drops the Generate
     out of whole-stage codegen (~20x slower, measured 3.7 s vs 0.16 s
     on a 200k x 3-level probe)."""
+    if not levels:  # nothing to cover: a null cell joins no cover row
+        return points.withColumn("cell", F.lit(None).cast("long"))
     fin = max(levels)
     fine = C.cell_id_col(F.col(lat_col), F.col(lon_col), fin)
     # withColumn, not a rename: a point frame read back from the
@@ -201,7 +205,8 @@ def pip_join(
     in ONE plan: the point side explodes to one cell per distinct level
     (level-tagged cell ids cannot collide).
 
-    ``strategy="broadcast"`` broadcasts the driver-built cover. The
+    ``strategy="broadcast"`` broadcasts the driver-built cover and
+    refines the boundary rows with refine_in_polygons. The
     ``"shuffle"`` strategy, for polygon sets too large to broadcast,
     turns the list into a rings frame and runs pip_join_rings' salted
     shuffle join and refine on it, with the cover levels picked here on
@@ -219,80 +224,59 @@ def pip_join(
         )
     if strategy != "broadcast":
         raise ValueError(f"strategy must be 'broadcast' or 'shuffle', got {strategy!r}")
-    if level == "auto":
-        by_level: dict[int, list[Polygon]] = {}
-        for p in polygons:
-            by_level.setdefault(pick_cover_level(p, target_cells), []).append(p)
-        if not by_level:
-            # empty polygon list (polygons_from_closed_ways can return
-            # []): fall through to the non-auto path, which joins
-            # against an empty cover and yields an empty DataFrame with
-            # the points-plus-poly_id schema instead of None
-            level = 12
-        else:
-            # SINGLE-PLAN multi-level join (r3): cell ids embed their
-            # level in the low 5 bits (cells.cell_id_col), so covers at
-            # different levels never collide — one broadcast join over
-            # the union of all per-level covers, with the point side
-            # exploded to its cell at each distinct level, then ONE
-            # refine stage. The old plan unioned a full join+refine
-            # branch per level — ~2k extra stages of fixed mapInPandas
-            # and scheduling overhead per call (measured 2-3.5 s on a
-            # 1000-point input), which dominated short spatial stages.
-            levels = sorted(by_level)
-            cover_pdf = pd.concat(
-                [polygon_cell_cover(group, lvl) for lvl, group in sorted(by_level.items())],
-                ignore_index=True,
-            )
-            cover = spark.createDataFrame(cover_pdf) if len(cover_pdf) else (
-                spark.createDataFrame([], "cell long, poly_id string, full boolean")
-            )
-            pts = _explode_multilevel_cells(points, levels, lat_col, lon_col)
-            cand = pts.join(F.broadcast(cover), "cell", "inner")
-            return _refine_candidates(spark, cand, polygons, lat_col, lon_col)
-
-    cover_pdf = polygon_cell_cover(polygons, level)
-    cover = spark.createDataFrame(cover_pdf) if len(cover_pdf) else spark.createDataFrame(
-        [], "cell long, poly_id string, full boolean"
+    # SINGLE-PLAN multi-level join: cell ids embed their level in the
+    # low 5 bits (cells.cell_id_col), so covers at different levels
+    # never collide — one broadcast join over the union of all
+    # per-level covers, with the point side exploded to its cell at
+    # each distinct level, then ONE refine stage
+    by_level: dict[int, list[Polygon]] = {}
+    for p in polygons:
+        lvl = level if level != "auto" else pick_cover_level(p, target_cells)
+        by_level.setdefault(lvl, []).append(p)
+    covers = [polygon_cell_cover(group, lvl) for lvl, group in sorted(by_level.items())]
+    cover = spark.createDataFrame(
+        pd.concat(covers or [polygon_cell_cover([], 0)], ignore_index=True),
+        "cell long, poly_id string, full boolean",
     )
-    pts = with_cell(points, level, lat_col, lon_col)
+    pts = _explode_multilevel_cells(points, sorted(by_level), lat_col, lon_col)
     cand = pts.join(F.broadcast(cover), "cell", "inner")
-    return _refine_candidates(spark, cand, polygons, lat_col, lon_col)
-
-
-def _refine_candidates(
-    spark: SparkSession,
-    cand: DataFrame,
-    polygons: list[Polygon],
-    lat_col: str,
-    lon_col: str,
-) -> DataFrame:
-    """Exact stage of the broadcast pip_join: `full`-cell candidates
-    bypass Python (provably inside); boundary candidates go through one
-    vectorized crossing-number refine against the broadcast rings."""
-    rings_by_poly = {p.poly_id: [r.copy() for r in p.rings] for p in polygons}
-    b_rings = spark.sparkContext.broadcast(rings_by_poly)
-    out_schema = cand.drop("full", "cell").schema
-
-    # rows in `full`-covered cells are provably inside: keep them on the
+    # rows in `full`-covered cells are provably inside: they stay on the
     # JVM side untouched — only boundary-cell candidates pay the Python
     # refine hop (at deep cover levels that is a thin perimeter band)
     full_part = cand.filter(F.col("full")).drop("full", "cell")
-    boundary = cand.filter(~F.col("full"))
+    boundary = cand.filter(~F.col("full")).drop("full", "cell")
+    return full_part.unionByName(refine_in_polygons(boundary, polygons, lat_col, lon_col))
+
+
+def refine_in_polygons(
+    df: DataFrame, polygons: list[Polygon], lat_col: str = "lat", lon_col: str = "lon"
+) -> DataFrame:
+    """Keep the rows of ``df`` whose (lat, lon) lies inside the polygon
+    named by the row's ``poly_id`` — the exact stage of every PIP plan
+    whose polygons are a driver list. One stateless mapInArrow (so it
+    also runs on a streaming source in append mode): each batch's rows
+    group by dictionary-encoded poly_id and take one crossing-number
+    call per polygon. Coordinates are cast to float64 first, so the
+    test is bit-exact for any numeric column type. The rings ride in
+    the closure; PySpark broadcasts a large command itself."""
+    rings_by_poly = {p.poly_id: [np.asarray(r, np.float64) for r in p.rings] for p in polygons}
 
     def _refine(batches):
-        rings_map = b_rings.value
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            lat = pdf[lat_col].to_numpy(np.float64)
-            lon = pdf[lon_col].to_numpy(np.float64)
-            keep = np.zeros(len(pdf), dtype=bool)
-            for pid, idx in pdf.groupby("poly_id").indices.items():
-                keep[idx] = point_in_polygon(lat[idx], lon[idx], rings_map[pid])
-            yield pdf[keep].drop(columns=["full", "cell"])
+        for b in batches:
+            lat = pc.cast(b.column(lat_col), pa.float64()).to_numpy(zero_copy_only=False)
+            lon = pc.cast(b.column(lon_col), pa.float64()).to_numpy(zero_copy_only=False)
+            ids = pc.dictionary_encode(b.column("poly_id"))
+            codes = ids.indices.to_numpy()
+            pids = ids.dictionary.to_pylist()
+            # row indexes per polygon: one stable sort, split at the counts
+            order = np.argsort(codes, kind="stable")
+            ends = np.cumsum(np.bincount(codes, minlength=len(pids)))[:-1]
+            keep = np.zeros(b.num_rows, dtype=bool)
+            for pid, idx in zip(pids, np.split(order, ends)):
+                keep[idx] = point_in_polygon(lat[idx], lon[idx], rings_by_poly[pid])
+            yield b.filter(pa.array(keep))
 
-    return full_part.unionByName(boundary.mapInPandas(_refine, out_schema))
+    return df.mapInArrow(_refine, df.schema)
 
 
 RINGS_SCHEMA = (

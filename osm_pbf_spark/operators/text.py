@@ -292,41 +292,6 @@ def repetition_stats(docs: DataFrame, text_col: str = "text", id_col: str = "doc
     )
 
 
-def doc_stats(docs: DataFrame, text_col: str = "text") -> DataFrame:
-    """Per-document analysis columns in one pass."""
-    c = F.col(text_col)
-    return docs.select(
-        "*",
-        token_count(c).alias("n_tokens"),
-        quality_score(c).alias("quality"),
-        lang_id(c).alias("lang_pred"),
-        fingerprint_md5(c).alias("fp"),
-    )
-
-
-def rolling_fingerprint(text: str, window: int = 16, mod: int = (1 << 61) - 1,
-                        base: int = 257) -> int:
-    """Pure-Python Rabin-Karp rolling-hash document fingerprint:
-    min of rolling hashes (a winnowing-style representative). Test-side
-    counterpart used by the dedup property tests."""
-    data = text.encode("utf-8")
-    if len(data) < window:
-        h = 0
-        for b in data:
-            h = (h * base + b) % mod
-        return h
-    h = 0
-    power = pow(base, window - 1, mod)
-    best = None
-    for i, b in enumerate(data):
-        if i >= window:
-            h = (h - data[i - window] * power) % mod
-        h = (h * base + b) % mod
-        if i >= window - 1:
-            best = h if best is None or h < best else best
-    return best
-
-
 def bigram_lm_score(
     docs: DataFrame,
     text_col: str = "text",

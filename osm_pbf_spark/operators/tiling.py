@@ -22,7 +22,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..functions import tiles as TL
-from .spatial_join import Polygon
+from .spatial_join import Polygon, refine_in_polygons
 
 
 def assign_point_tiles(
@@ -845,25 +845,7 @@ def rasterize_polygons(
             + F.lit(float(lon0))
         ).alias("lon"),
     )
-
-    from ..functions.geometry import point_in_polygon
-
-    rings_by_poly = {p.poly_id: [r.copy() for r in p.rings] for p in polygons}
-    b_rings = spark.sparkContext.broadcast(rings_by_poly)
-
-    def _refine(batches):
-        rings_map = b_rings.value
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            lat = pdf["lat"].to_numpy(np.float64)
-            lon = pdf["lon"].to_numpy(np.float64)
-            keep = np.zeros(len(pdf), dtype=bool)
-            for pid, idx in pdf.groupby("poly_id").indices.items():
-                keep[idx] = point_in_polygon(lat[idx], lon[idx], rings_map[pid])
-            yield pdf[keep][["poly_id", "gx", "gy"]]
-
-    return centers.mapInPandas(_refine, "poly_id string, gx long, gy long")
+    return refine_in_polygons(centers, polygons).select("poly_id", "gx", "gy")
 
 
 def kde_grid(

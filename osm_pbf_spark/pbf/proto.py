@@ -121,11 +121,6 @@ def decode_packed_sint(data: bytes | memoryview) -> np.ndarray:
     return zigzag_decode_np(decode_packed_varints(data))
 
 
-def decode_packed_int(data: bytes | memoryview) -> np.ndarray:
-    """Packed int32/int64/uint/bool/enum (plain varint) -> int64."""
-    return decode_packed_varints(data).astype(np.int64)
-
-
 def batch_repeated_scalar(
     vals_lists: list[list], packed_sint: bool = False
 ) -> tuple[np.ndarray, np.ndarray]:

@@ -24,7 +24,8 @@ Protocol (exactly-once restart semantics, BASELINE.json:6,14):
   a temp file beside the target, ``fsync`` of the file, rename over the
   target (atomic on POSIX), ``fsync`` of the directory. A crash leaves
   the old file or the new one, and a returned commit survives power
-  loss.
+  loss. ``rollback_to`` moves existing manifests instead, and fsyncs
+  every directory its moves touch before it commits the new snapshot.
 - a manifest records the split's files + row/byte counts + SCHEMA
   (every writer records it, so a read opens no parquet footer) +
   LINEAGE (input description, operator config, engine version) +
@@ -87,6 +88,12 @@ def _write_json(path: str, obj, indent: int | None = 1) -> None:
         f.flush()
         os.fsync(f.fileno())
     os.replace(tmp, path)
+    _fsync_dir(d)
+
+
+def _fsync_dir(d: str) -> None:
+    """fsync directory ``d`` so the renames into and out of it are
+    durable."""
     fd = os.open(d, os.O_RDONLY)
     try:
         os.fsync(fd)
@@ -1479,7 +1486,9 @@ class IcebergLikeSink:
         # (the docstring's 'live split set equals the target's exactly'
         # must hold, never silently lose splits).
         rollback_root = os.path.join(self.root, "_rollback")
+        manifests = os.path.join(self.root, _MANIFEST_DIR)
         restored = []
+        touched: set[str] = set()
         for sid in sorted(known):
             if os.path.exists(self._manifest_path(sid)):
                 continue
@@ -1497,6 +1506,7 @@ class IcebergLikeSink:
                     "in the _rollback attic — refusing a partial rollback"
                 )
             os.replace(found, self._manifest_path(sid))
+            touched.update((os.path.dirname(found), manifests))
             restored.append(sid)
         attic = os.path.join(rollback_root, uuid.uuid4().hex)
         moved = []
@@ -1507,7 +1517,12 @@ class IcebergLikeSink:
                     self._manifest_path(sid),
                     os.path.join(attic, f"split-{sid}.json"),
                 )
+                # with the entries makedirs added for the attic itself
+                touched.update((manifests, attic, rollback_root, self.root))
                 moved.append(sid)
+        # the moves are durable before the snapshot that relies on them
+        for d in sorted(touched):
+            _fsync_dir(d)
         return self.commit_snapshot(
             properties={
                 "rollback_of": target["snapshot_id"],

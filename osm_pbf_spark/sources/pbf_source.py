@@ -159,7 +159,7 @@ def polygons_from_closed_ways(geoms_df: DataFrame, max_polygons: int = 100_000):
     if len(rows) > max_polygons:
         raise ValueError(
             f"more than {max_polygons} closed ways; raise max_polygons or "
-            "use pip_join(strategy='shuffle') with a cover DataFrame"
+            "use rings_from_closed_ways with pip_join_rings (no driver collect)"
         )
     return [
         Polygon(

@@ -10,7 +10,11 @@ import numpy as np
 from pyspark.sql import functions as F
 
 from osm_pbf_spark.operators.spatial_join import Polygon, pip_join, with_cell
-from osm_pbf_spark.operators.tiling import assign_point_tiles, tile_pyramid_rollup
+from osm_pbf_spark.operators.tiling import (
+    assign_point_tiles,
+    rasterize_polygons,
+    tile_pyramid_rollup,
+)
 
 
 def _plan(df) -> str:
@@ -43,8 +47,18 @@ def test_pip_join_broadcasts_cover_and_limits_python_to_boundary(spark):
     assert "BroadcastHashJoin" in plan  # coarse stage never shuffles points
     # exactly ONE Python stage (the boundary refine); full-cell rows
     # bypass it on the JVM side via the union
-    assert plan.count("InPandas") == 1, plan
+    assert "InPandas" not in plan and "EvalPython" not in plan, plan
+    assert plan.count("MapInArrow") == 1, plan
     assert "Union" in plan
+
+
+def test_rasterize_runs_one_arrow_refine_and_no_shuffle(spark):
+    """rasterize_polygons is map-only: the bbox cells explode on the
+    JVM and one stateless Arrow refine keeps the centers inside."""
+    poly = Polygon("tri", [np.array([[0.0, 0.0], [4.0, 2.0], [0.0, 4.0]])])
+    plan = _plan(rasterize_polygons(spark, [poly], res=0.5))
+    assert plan.count("MapInArrow") == 1, plan
+    assert "InPandas" not in plan and "Exchange" not in plan, plan
 
 
 def test_pip_shuffle_runs_one_cover_and_one_refine(spark):

@@ -76,6 +76,46 @@ def test_every_metadata_rename_is_fsynced(tmp_path, monkeypatch):
     assert not [n for _, _, fs in os.walk(root) for n in fs if ".tmp-" in n]
 
 
+def _commit_one_split(sink: IcebergLikeSink, split_id: str) -> dict:
+    """Commit a one-file split and a snapshot; returns the snapshot."""
+    path = os.path.join(sink.root, "data", f"split={split_id}", "part-0.parquet")
+    os.makedirs(os.path.dirname(path))
+    pq.write_table(pa.table({"cell": pa.array([1, 5], pa.int64())}), path)
+    report = {"path": path, "n_rows": 2, "n_bytes": os.path.getsize(path),
+              "cell_min": 1, "cell_max": 5}
+    sink.commit_reported_split(split_id, [report])
+    return sink.commit_snapshot()
+
+
+def test_rollback_moves_are_fsynced_before_its_snapshot(tmp_path, monkeypatch):
+    """rollback_to moves manifests into the _rollback attic and back;
+    every directory a move touches is fsynced after the move and before
+    the rollback's snapshot is written."""
+    sink = IcebergLikeSink(str(tmp_path / "t"))
+    first = _commit_one_split(sink, "a")
+    second = _commit_one_split(sink, "b")
+    manifests = os.path.join(sink.root, "_manifests")
+    attic_root = os.path.join(sink.root, "_rollback")
+    events = _record_fsync_and_replace(monkeypatch)
+
+    def check(start: int, src_dirs: list[str]) -> None:
+        seg = events[start:]
+        moves = [i for i, e in enumerate(seg) if e[0] == "replace" and e[3] == "split-b.json"]
+        snap = next(i for i, e in enumerate(seg) if e[0] == "replace" and i > moves[-1])
+        synced = {e[1] for e in seg[moves[0] : snap] if e[0] == "fsync" and e[2]}
+        want = {seg[i][2] for i in moves} | {os.stat(d).st_ino for d in src_dirs}
+        assert len(moves) == 1 and want <= synced
+
+    sink.rollback_to(first["snapshot_id"])  # split b moves into the attic
+    assert sink.completed_splits() == {"a"}
+    (attic,) = [os.path.join(attic_root, d) for d in os.listdir(attic_root)]
+    check(0, [manifests, attic_root])
+    n = len(events)
+    sink.rollback_to(second["snapshot_id"])  # and back out of it
+    assert sink.completed_splits() == {"a", "b"}
+    check(n, [attic])
+
+
 def _read_jobs(spark, root: str, group: str) -> tuple[list, list]:
     """(rows, Spark job ids) of building IcebergLikeSink(root).read under
     a job group; the rows are collected outside the group."""

@@ -97,6 +97,43 @@ def test_pip_join_shuffle_strategy_same_result(spark, level):
     assert a == b and len(a) > 0
 
 
+@pytest.mark.parametrize("strategy", ["broadcast", "shuffle"])
+@pytest.mark.parametrize("level", [8, "auto"])
+def test_pip_join_empty_polygon_list(spark, strategy, level):
+    """No polygons (polygons_from_closed_ways can return []): an empty
+    result with the points-plus-poly_id schema, on every route."""
+    df = spark.createDataFrame(
+        [("a", 1.0, 2.0), ("b", -3.0, 4.0)], "doc_id string, lat double, lon double"
+    )
+    out = pip_join(spark, df, [], level=level, strategy=strategy)
+    assert out.schema.simpleString() == (
+        "struct<doc_id:string,lat:double,lon:double,poly_id:string>"
+    )
+    assert out.collect() == []
+
+
+def test_pip_join_float_coordinates_refine_exactly(spark):
+    """float32 lat/lon columns keep their type and give the rows of the
+    same points as doubles: the refine widens to float64 exactly."""
+    from pyspark.sql import functions as F
+
+    polys = make_polygons()
+    ids, pts = make_points(2000, seed=13)
+    dbl = spark.createDataFrame(
+        [(i, float(np.float32(a)), float(np.float32(b))) for i, (a, b) in zip(ids, pts)],
+        "doc_id string, lat double, lon double",
+    )
+    flt = dbl.select("doc_id", F.col("lat").cast("float"), F.col("lon").cast("float"))
+    for level in (8, "auto"):
+        out = pip_join(spark, flt, polys, level=level)
+        assert out.schema["lat"].dataType.simpleString() == "float"
+        got = sorted((r["doc_id"], r["poly_id"]) for r in out.collect())
+        want = sorted(
+            (r["doc_id"], r["poly_id"]) for r in pip_join(spark, dbl, polys, level=level).collect()
+        )
+        assert got == want and len(got) > 0
+
+
 def test_pip_join_points_with_cell_column(spark):
     """A point frame read back from the engine's own table carries a
     ``cell`` column; every join route replaces it instead of adding a

@@ -196,7 +196,7 @@ def test_watermark_append_drops_late_rows(spark, tmp_path):
 
 def test_streaming_pip_equals_batch_pip(spark, tmp_path):
     """The batch pip_join plan applied to a STREAMING point source
-    (stream-static broadcast join + stateless mapInPandas refine) must
+    (stream-static broadcast join + stateless mapInArrow refine) must
     produce exactly the batch result on the same points."""
     import numpy as np
 
