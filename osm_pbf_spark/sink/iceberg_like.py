@@ -88,13 +88,14 @@ def _write_json(path: str, obj, indent: int | None = 1) -> None:
         f.flush()
         os.fsync(f.fileno())
     os.replace(tmp, path)
-    _fsync_dir(d)
+    _fsync(d)
 
 
-def _fsync_dir(d: str) -> None:
-    """fsync directory ``d`` so the renames into and out of it are
+def _fsync(path: str) -> None:
+    """fsync file or directory ``path``: a file's bytes, or a
+    directory's entries (the renames and creates in it), are then
     durable."""
-    fd = os.open(d, os.O_RDONLY)
+    fd = os.open(path, os.O_RDONLY)
     try:
         os.fsync(fd)
     finally:
@@ -1522,7 +1523,7 @@ class IcebergLikeSink:
                 moved.append(sid)
         # the moves are durable before the snapshot that relies on them
         for d in sorted(touched):
-            _fsync_dir(d)
+            _fsync(d)
         return self.commit_snapshot(
             properties={
                 "rollback_of": target["snapshot_id"],

@@ -209,3 +209,91 @@ def test_pack_vertex_out_of_range_raises(spark):
     assert len(ok) == 1 and len(ok[0]["points"]) == 2
     assert ok[0]["points"][0]["lon"] == -500.0
     assert ok[0]["points"][1]["lat"] == 95.0
+
+
+def _build_ways_multiblob(dirpath, way_ids=(700, 701, 702, 703)):
+    """Three blobs: nodes 1..40 over the first two, ways in the last two
+    whose refs cross blobs; way ``way_ids[2]`` has a ref (999) with no
+    node, way ``way_ids[3]`` is closed."""
+    import os
+
+    from osm_pbf_spark.pbf import encoder as E
+    from tests.pbf_fixtures import nd
+
+    w0, w1, w2, w3 = way_ids
+    blocks = []
+    for lo, hi, ways in (
+        (1, 21, []),
+        (21, 41, [{"id": w0, "refs": [3, 25, 4, 33], "tags": {}}]),
+        (41, 41, [
+            {"id": w1, "refs": [40, 1], "tags": {"highway": "x"}},
+            {"id": w2, "refs": [5, 999, 6], "tags": {}},
+            {"id": w3, "refs": [10, 30, 20, 10], "tags": {"building": "yes"}},
+        ]),
+    ):
+        st = E.StringTable()
+        groups = []
+        if hi > lo:
+            groups.append(E.encode_dense_nodes(
+                [{"id": i, "lat_raw": nd(45.0 + 0.01 * i), "lon_raw": nd(7.0 - 0.02 * i),
+                  "tags": {}} for i in range(lo, hi)], st))
+        if ways:
+            groups.append(b"".join(E.encode_way(w, st) for w in ways))
+        blocks.append(E.encode_primitive_block(groups, st))
+    path = os.path.join(dirpath, f"ways_multiblob_{w0}.osm.pbf")
+    E.write_pbf(path, blocks)
+    return path
+
+
+def _decode_leaves(df) -> int:
+    return df._jdf.queryExecution().executedPlan().toString().count("MapInArrow")
+
+
+@pytest.mark.parametrize("fixture,copies", [
+    ("multiblob", 1),
+    ("ways_multiblob", 1),
+    ("ways_multiblob", 2),
+])
+def test_one_decode_assembly_equals_generic_join(spark, fixtures_dir, tmp_path,
+                                                 fixture, copies):
+    """The one-decode route of ``assemble_way_geometries`` returns the
+    generic join's rows exactly: a ref with no node is dropped, and a
+    file listed twice (every node and way decoded twice) gives the
+    join's multiplicities."""
+    if fixture == "multiblob":
+        path = f"{fixtures_dir}/multiblob.osm.pbf"
+    else:
+        path = _build_ways_multiblob(str(tmp_path))
+    entities, _ = src.read_pbf(spark, [path] * copies, parallelism=2)
+    one = src.assemble_way_geometries(src.ways(entities), src.nodes(entities))
+    generic = src.assemble_way_geometries(
+        src.ways(entities).select("*"), src.nodes(entities).select("*")
+    )
+    assert _decode_leaves(one) == 1 and _decode_leaves(generic) == 2
+
+    def rows(df):
+        return sorted(
+            (r["way_id"], [tuple(p) for p in r["points"]], r["is_closed"])
+            for r in df.collect()
+        )
+
+    got = rows(one)
+    assert got == rows(generic)
+    if fixture == "ways_multiblob":
+        assert [w for w, _, _ in got] == [700, 701, 702, 703]
+        pts = {w: p for w, p, _ in got}
+        # refs [5, 999, 6]: the missing node drops one vertex only
+        assert len(pts[702]) == 2 * copies * copies
+        assert len(pts[700]) == 4 * copies * copies
+        assert [c for _, _, c in got] == [False, False, False, True]
+
+
+def test_one_decode_assembly_not_packable_raises(spark, tmp_path):
+    """A way id the 39-bit field of the packed ref cannot hold fails
+    loudly in the slim decode kernel, as in the generic route."""
+    path = _build_ways_multiblob(str(tmp_path), way_ids=(700, 1 << 39, 702, 703))
+    entities, _ = src.read_pbf(spark, path)
+    geoms = src.assemble_way_geometries(src.ways(entities), src.nodes(entities))
+    assert _decode_leaves(geoms) == 1
+    with pytest.raises(Exception, match="not packable"):
+        geoms.collect()

@@ -143,6 +143,23 @@ def test_way_assembly_plan_shape(spark):
     assert plan.count("Exchange hashpartitioning") == 3, plan
 
 
+def test_one_decode_way_assembly_plan_shape(spark, fixtures_dir):
+    """``assemble_way_geometries(ways(ents), nodes(ents))`` over one
+    ``read_pbf`` frame decodes the file ONCE: one slim decode
+    ``MapInArrow`` leaf, no broadcast of a decoded side, and two
+    exchanges (node id for the coordinate fill, way id for the regroup)
+    where the generic join plans two decode leaves and three. (The
+    fixture has four blobs: a one-task decode is a single partition,
+    which already satisfies the fill's distribution.)"""
+    from osm_pbf_spark.sources import pbf_source as src
+
+    ents, _ = src.read_pbf(spark, f"{fixtures_dir}/multiblob.osm.pbf")
+    plan = _plan(src.assemble_way_geometries(src.ways(ents), src.nodes(ents)))
+    assert plan.count("MapInArrow") == 1, plan
+    assert "BroadcastHashJoin" not in plan, plan
+    assert plan.count("Exchange hashpartitioning") == 2, plan
+
+
 def test_knn_two_round_never_broadcasts(spark):
     """knn_two_round is the LARGE-query path and its inputs are often
     decode-derived frames with garbage size estimates: a broadcast of

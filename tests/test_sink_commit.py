@@ -76,6 +76,35 @@ def test_every_metadata_rename_is_fsynced(tmp_path, monkeypatch):
     assert not [n for _, _, fs in os.walk(root) for n in fs if ".tmp-" in n]
 
 
+def test_ingest_data_files_are_fsynced_before_report(fixtures_dir, tmp_path, monkeypatch):
+    """The ingest kernel fsyncs each data file and then its split
+    directory before it reports the file, so no manifest can name a
+    file whose bytes or directory entry a power loss could lose. Runs
+    the kernel in-process over two bins of one split."""
+    from osm_pbf_spark.pbf.framing import scan_blobs
+    from osm_pbf_spark.sources.pbf_source import _decode_render_write_bins_factory
+
+    pbf = f"{fixtures_dir}/multiblob.osm.pbf"
+    refs = [r for r in scan_blobs(pbf) if r.blob_type == "OSMData"]
+    root = str(tmp_path / "t")
+    split_dir = os.path.join(root, "data", "split=s0")
+    os.makedirs(split_dir)
+    bins = [("s0", pbf, [r.offset for r in half], [r.size for r in half])
+            for half in (refs[:2], refs[2:])]
+    kernel = _decode_render_write_bins_factory(12, root, [bins])
+    events = _record_fsync_and_replace(monkeypatch)
+    for report in kernel(iter([pa.record_batch({"id": pa.array([0], pa.int64())})])):
+        events.append(("report", report.column("path")[0].as_py()))
+
+    dir_ino = os.stat(split_dir).st_ino
+    reports = [i for i, e in enumerate(events) if e[0] == "report"]
+    assert len(reports) == 2
+    for k, i in enumerate(reports):
+        seg = events[(reports[k - 1] + 1 if k else 0) : i]
+        file_sync = seg.index(("fsync", os.stat(events[i][1]).st_ino, False))
+        assert ("fsync", dir_ino, True) in seg[file_sync + 1 :]
+
+
 def _commit_one_split(sink: IcebergLikeSink, split_id: str) -> dict:
     """Commit a one-file split and a snapshot; returns the snapshot."""
     path = os.path.join(sink.root, "data", f"split={split_id}", "part-0.parquet")
