@@ -218,7 +218,7 @@ def entry(spark: SparkSession) -> DataFrame:
     """Flagship: derived points -> two-stage PIP join -> tile rollup.
 
     The full decode->render->sink pipeline is exercised by pytest and
-    bench.py; the driver smoke check wants a stable-schema DataFrame
+    perfbench; the driver smoke check wants a stable-schema DataFrame
     over sf0.001.
     """
     sf_dir = "/root/testdata/sf0.001"

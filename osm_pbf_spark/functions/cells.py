@@ -127,7 +127,8 @@ def children(cell: int) -> list[int]:
 
 
 def neighbors(cell: np.ndarray, ring: int = 1) -> np.ndarray:
-    """All cells within a Chebyshev ring (incl. self) of each input cell.
+    """All cells within a Chebyshev ring (incl. self) of each input cell,
+    each ring at its own cell's level (input levels may be mixed).
 
     lon wraps around the antimeridian; lat clamps at the poles.
     Returns shape (n_cells, (2*ring+1)**2) int64; duplicate ids possible
@@ -141,10 +142,11 @@ def neighbors(cell: np.ndarray, ring: int = 1) -> np.ndarray:
     dy = dy.ravel()[None, :]
     nx = (x[:, None] + dx) % n[:, None]  # wrap lon
     ny = np.clip(y[:, None] + dy, 0, (n - 1)[:, None])  # clamp lat
-    lv = int(level[0]) if len(np.unique(level)) == 1 else None
-    if lv is None:
-        raise ValueError("neighbors() requires uniform level")
-    return xy_to_cell(nx.ravel(), ny.ravel(), lv).reshape(nx.shape)
+    out = np.empty(nx.shape, dtype=np.int64)
+    for lv in np.unique(level):
+        rows = level == lv
+        out[rows] = xy_to_cell(nx[rows], ny[rows], int(lv))
+    return out
 
 
 def _quant_col(col, offset: float, extent: float, level: int):

@@ -1,14 +1,17 @@
 """Distributed exact kNN (SURVEY.md §2.3 G5).
 
 Replaces the reference r-tree's nearest-neighbor descent with TWO exact
-paths, both fixed lazy plans with zero driver pacing:
+paths, neither paced round by round from the driver:
 
-  - broadcast-brute (small query sets): one mapInPandas BLAS pass over
-    the candidates keeping a running per-query top-k, then a window
-    reduce — two jobs total;
+  - broadcast-brute (small query sets): the query rows, fetched by the
+    limited collect that picks this route, ride in the task closure;
+    one mapInPandas BLAS pass over the candidates keeps a running
+    per-query top-k, then a window reduce;
   - two-round cell-window plan (large query sets): round A upper-bounds
     each query's k-th distance from its 3x3 cell window, round B joins
-    exactly the cells intersecting that ball — ~5 shuffles, exact.
+    exactly the cells intersecting that ball — ~5 shuffles, exact, ONE
+    plan for all per-query levels. Only ``level="auto"`` runs a driver
+    action first: it checkpoints the per-query level assignment.
 
 (The original driver-paced ring-expansion loop — grow the window until
 a per-query outside-window lower bound proves resolution — was deleted
@@ -33,16 +36,14 @@ from pyspark.sql import types as T
 from ..functions import cells as C
 from ..functions.geometry import EARTH_RADIUS_M, haversine_m
 
-def _ring_cells_udf(level: int, ring: int):
-    @F.pandas_udf(T.ArrayType(T.LongType()))
-    def _ring(cell: pd.Series) -> pd.Series:
-        cells_arr = cell.to_numpy(np.int64)
-        if len(cells_arr) == 0:
-            return pd.Series([], dtype=object)
-        grid = C.neighbors(cells_arr, ring=ring)
-        return pd.Series([np.unique(row).tolist() for row in grid])
-
-    return _ring
+@F.pandas_udf(T.ArrayType(T.LongType()))
+def _ring_cells(cell: pd.Series) -> pd.Series:
+    """3x3 cell window of each cell, at the cell's own level."""
+    cells_arr = cell.to_numpy(np.int64)
+    if len(cells_arr) == 0:
+        return pd.Series([], dtype=object)
+    grid = C.neighbors(cells_arr, ring=1)
+    return pd.Series([np.unique(row).tolist() for row in grid])
 
 
 @F.pandas_udf(T.DoubleType())
@@ -58,6 +59,7 @@ def _haversine_udf(qlat: pd.Series, qlon: pd.Series, clat: pd.Series, clon: pd.S
 def _knn_broadcast_brute(
     spark: SparkSession,
     queries: DataFrame,
+    q_rows: list,
     candidates: DataFrame,
     k: int,
     metric: str,
@@ -65,29 +67,26 @@ def _knn_broadcast_brute(
     cand_id: str,
     exclude_self: bool,
 ) -> DataFrame:
-    """Exact kNN for SMALL query sets: broadcast the queries as numpy
-    arrays, stream candidate batches through ONE mapInPandas pass that
-    maintains a running per-query top-k per partition, then reduce the
-    tiny per-partition winners with a window. Two jobs total — the ring
-    expansion's driver-paced rounds (dozens of jobs) lose to this below
-    ~10^4 queries regardless of candidate count."""
-    q_rows = queries.select(query_id, "lat", "lon").collect()
-    q_ids = np.array([r[0] for r in q_rows], dtype=object)
-    q_lat = np.array([r[1] for r in q_rows], dtype=np.float64)
-    q_lon = np.array([r[2] for r in q_rows], dtype=np.float64)
+    """Exact kNN for SMALL query sets: the collected (query_id, lat,
+    lon) ``q_rows`` ride in the task closure as numpy arrays, candidate
+    batches stream through ONE mapInPandas pass that maintains a
+    running per-query top-k per partition, then a window reduces the
+    tiny per-partition winners — the ring expansion's driver-paced
+    rounds (dozens of jobs) lose to this below ~10^4 queries."""
+    ids = np.array([r[0] for r in q_rows], dtype=object)
+    qla = np.array([r[1] for r in q_rows], dtype=np.float64)
+    qlo = np.array([r[2] for r in q_rows], dtype=np.float64)
     # self-exclusion is exact IN the local pass: each candidate id gets
     # one hash lookup against the query-id map (O(n_cands) total, never
     # an (nq x chunk) id matrix) and its distance to its own query row
     # is masked to +inf before top-k selection — duplicate candidate
     # ids at distance 0 can no longer crowd true neighbors out of the
     # slot budget
-    qrow_map = {qid: i for i, qid in enumerate(q_ids)} if exclude_self else None
-    bq = spark.sparkContext.broadcast((q_ids, q_lat, q_lon, qrow_map))
-    nq = len(q_ids)
+    qrow = {qid: i for i, qid in enumerate(ids)} if exclude_self else None
+    nq = len(ids)
     kk = k
 
     def _local_topk(batches):
-        ids, qla, qlo, qrow = bq.value
         # haversine surrogate: rank by NEGATIVE unit-vector dot product
         # (chord distance is monotone in great-circle distance), so the
         # whole pairwise phase is one BLAS matrix multiply per chunk —
@@ -221,9 +220,10 @@ def _dist_col(metric: str):
     return _haversine_udf(F.col("q_lat"), F.col("q_lon"), F.col("c_lat"), F.col("c_lon"))
 
 
-def _window_cells_udf(level: int, metric: str, max_window_cells: int):
-    """(q_lat, q_lon, ub) -> all cells intersecting the closed ball of
-    radius ub around the query (None when the window would exceed
+def _window_cells_udf(metric: str, max_window_cells: int):
+    """(q_lat, q_lon, ub, q_cell) -> all cells, at the level of the
+    query's own cell, intersecting the closed ball of radius ub around
+    the query (None when the window would exceed
     ``max_window_cells`` — those queries take the brute tail). The
     radius->degree-span conversion is the exact inverse of the ring
     path's _guarantee_udf lower bound. Float slop is absorbed by a
@@ -234,11 +234,12 @@ def _window_cells_udf(level: int, metric: str, max_window_cells: int):
     floor() of the inflated extreme is monotone past it."""
 
     @F.pandas_udf(T.ArrayType(T.LongType()))
-    def _w(lat: pd.Series, lon: pd.Series, ub: pd.Series) -> pd.Series:
+    def _w(lat: pd.Series, lon: pd.Series, ub: pd.Series, cell: pd.Series) -> pd.Series:
         la = lat.to_numpy(np.float64)
         lo = lon.to_numpy(np.float64)
         u = ub.to_numpy(np.float64)
-        n = 1 << level
+        level = C.cell_level(cell.to_numpy(np.int64))
+        n = np.int64(1) << level
         slop = 1.0 + 1e-9
         if metric == "euclid2_deg":
             r = np.sqrt(np.maximum(u, 0.0)) * slop + 1e-300
@@ -264,18 +265,18 @@ def _window_cells_udf(level: int, metric: str, max_window_cells: int):
         out = []
         for i in range(len(la)):
             xs = np.arange(x0[i], x1[i] + 1, dtype=np.int64)
-            if len(xs) >= n:
-                xs = np.arange(n, dtype=np.int64)
+            if len(xs) >= n[i]:
+                xs = np.arange(n[i], dtype=np.int64)
             elif wrap:
-                xs = xs % n
+                xs = xs % n[i]
             else:
-                xs = xs[(xs >= 0) & (xs < n)]
+                xs = xs[(xs >= 0) & (xs < n[i])]
             ys = np.arange(y0[i], y1[i] + 1, dtype=np.int64)
             if len(xs) * len(ys) > max_window_cells:
                 out.append(None)
                 continue
             gx, gy = np.meshgrid(xs, ys, indexing="ij")
-            out.append(np.unique(C.xy_to_cell(gx.ravel(), gy.ravel(), level)).tolist())
+            out.append(np.unique(C.xy_to_cell(gx.ravel(), gy.ravel(), int(level[i]))).tolist())
         return pd.Series(out, dtype=object)
 
     return _w
@@ -292,7 +293,6 @@ def knn_two_round(
     cand_id: str = "doc_id",
     exclude_self: bool = True,
     max_window_cells: int = 4096,
-    sample_cap: int | None = None,
 ) -> DataFrame:
     """Exact kNN via a FIXED two-round plan with no driver pacing
     (SURVEY §2.3 G5 — the deleted ring-expansion loop serialized dozens
@@ -311,7 +311,7 @@ def knn_two_round(
     window would exceed ``max_window_cells``, fall back to a brute
     scan — choose ``level`` so occupancy makes both rare (the auto
     router assigns per-query levels with >=max(4k,16) candidates in
-    the window before calling this).
+    the window and runs this same plan over them).
 
     Everything is one lazy plan: ~5 shuffles total, zero driver-side
     actions, so it composes with downstream operators and scales with
@@ -330,20 +330,51 @@ def knn_two_round(
     governed by spark.sql.shuffle.partitions exactly as in the
     way-assembly join.
     """
-    from .spatial_join import with_cell
+    return _two_round(
+        queries.withColumn("_lvl", F.lit(level)), candidates, k, [level], metric,
+        query_id, cand_id, exclude_self, max_window_cells,
+    )
 
+
+def _two_round(
+    queries: DataFrame,
+    candidates: DataFrame,
+    k: int,
+    levels: list[int],
+    metric: str,
+    query_id: str,
+    cand_id: str,
+    exclude_self: bool,
+    max_window_cells: int,
+) -> DataFrame:
+    """The :func:`knn_two_round` plan, each query at the cell level in
+    its ``_lvl`` column, one of ``levels``. Cell ids carry their level,
+    so ONE plan serves every level: a query's windows hold cells of its
+    own level only, and they join the candidate rows of that level."""
+    from .spatial_join import _explode_multilevel_cells
+
+    # the query cell is encoded ONCE at the finest level in use; a
+    # coarser query level is its parent (exact bit truncation)
+    fin = max(levels)
+    q_cell = F.col("q_cell")
+    for lvl in sorted(set(levels))[:-1]:
+        parent = C.parent_col(F.col("q_cell"), fin, lvl)
+        q_cell = F.when(F.col("_lvl") == lvl, parent).otherwise(q_cell)
     q = queries.select(
         F.col(query_id).alias("query_id"),
         F.col("lat").alias("q_lat"),
         F.col("lon").alias("q_lon"),
+        "_lvl",
     )
-    q = with_cell(q, level, "q_lat", "q_lon", "q_cell")
+    q = q.withColumn("q_cell", C.cell_id_col(F.col("q_lat"), F.col("q_lon"), fin))
+    q = q.withColumn("q_cell", q_cell).drop("_lvl")
     cand = candidates.select(
         F.col(cand_id).alias("neighbor_id"),
         F.col("lat").alias("c_lat"),
         F.col("lon").alias("c_lon"),
     )
-    cand = with_cell(cand, level, "c_lat", "c_lon", "cell")
+    # one candidate row per level in use (a single level: one row each)
+    cand_x = _explode_multilevel_cells(cand, levels, "c_lat", "c_lon")
 
     # ROUND-A SAMPLE CAP: the k-th distance of ANY >=k-subset of the
     # window is a valid upper bound on the true k-th distance, so round
@@ -352,56 +383,53 @@ def knn_two_round(
     # it instead of joining all 10^5+. Round B is NEVER capped, so the
     # output stays exact; a (astronomically unlikely) undersampled
     # query just falls into the correct brute tail.
-    cap = sample_cap if sample_cap is not None else max(4 * k, 32)
-    cand_a = cand.join(
-        cand.groupBy("cell").agg(F.count(F.lit(1)).alias("_cnt")).hint("shuffle_hash"),
+    cap = max(4 * k, 32)
+    cand_a = cand_x.join(
+        cand_x.groupBy("cell").agg(F.count(F.lit(1)).alias("_cnt")).hint("shuffle_hash"),
         "cell",
     ).filter(
         F.pmod(F.hash("neighbor_id"), F.greatest(F.floor(F.col("_cnt") / cap), F.lit(1)))
         == 0
     ).drop("_cnt")
 
-    ring1 = _ring_cells_udf(level, 1)
+    w = Window.partitionBy("query_id").orderBy("dist", "neighbor_id")
+
+    def top_k(pairs: DataFrame) -> DataFrame:
+        """The k nearest of each query's (query, candidate) pairs."""
+        if exclude_self:
+            pairs = pairs.filter(F.col("query_id") != F.col("neighbor_id"))
+        return (
+            pairs.withColumn("dist", _dist_col(metric))
+            .withColumn("rank", F.row_number().over(w))
+            .filter(F.col("rank") <= k)
+        )
+
     ja = (
-        q.withColumn("cell", F.explode(ring1(F.col("q_cell"))))
+        q.withColumn("cell", F.explode(_ring_cells(F.col("q_cell"))))
         .join(cand_a.hint("shuffle_hash"), "cell", "inner")
         .drop("cell")
     )
-    if exclude_self:
-        ja = ja.filter(F.col("query_id") != F.col("neighbor_id"))
-    w = Window.partitionBy("query_id").orderBy("dist", "neighbor_id")
-    ub = (
-        ja.withColumn("dist", _dist_col(metric))
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .groupBy("query_id")
-        .agg(F.max("dist").alias("_ub"), F.count(F.lit(1)).alias("_n"))
+    ub = top_k(ja).groupBy("query_id").agg(
+        F.max("dist").alias("_ub"), F.count(F.lit(1)).alias("_n")
     )
 
     resolved = q.join(
         ub.filter(F.col("_n") >= k).select("query_id", "_ub").hint("shuffle_hash"),
         "query_id",
     )
-    win_udf = _window_cells_udf(level, metric, max_window_cells)
+    win_udf = _window_cells_udf(metric, max_window_cells)
     resolved = resolved.withColumn(
-        "_cells", win_udf(F.col("q_lat"), F.col("q_lon"), F.col("_ub"))
+        "_cells", win_udf(F.col("q_lat"), F.col("q_lon"), F.col("_ub"), F.col("q_cell"))
     )
     overflow = resolved.filter(F.col("_cells").isNull()).select("query_id")
     jb = (
         resolved.filter(F.col("_cells").isNotNull())
         .withColumn("cell", F.explode("_cells"))
         .drop("_cells", "_ub", "q_cell")
-        .join(cand.hint("shuffle_hash"), "cell", "inner")
+        .join(cand_x.hint("shuffle_hash"), "cell", "inner")
         .drop("cell")
     )
-    if exclude_self:
-        jb = jb.filter(F.col("query_id") != F.col("neighbor_id"))
-    main = (
-        jb.withColumn("dist", _dist_col(metric))
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "dist")
-    )
+    main = top_k(jb).select("query_id", "neighbor_id", "rank", "dist")
 
     # brute tail: queries with <k in-window candidates (sparse region /
     # tiny corpus) or an oversized ball window — all lazily empty when
@@ -424,16 +452,9 @@ def knn_two_round(
     # short-circuits it entirely once the tail side materializes as 0
     # rows.
     tj = tail_q.select("query_id", "q_lat", "q_lon").crossJoin(
-        cand.drop("cell").hint("shuffle_replicate_nl")
+        cand.hint("shuffle_replicate_nl")
     )
-    if exclude_self:
-        tj = tj.filter(F.col("query_id") != F.col("neighbor_id"))
-    tail = (
-        tj.withColumn("dist", _dist_col(metric))
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "dist")
-    )
+    tail = top_k(tj).select("query_id", "neighbor_id", "rank", "dist")
     return main.unionByName(tail)
 
 
@@ -449,7 +470,6 @@ def knn_join(
     exclude_self: bool = True,
     auto_levels: tuple[int, int] = (6, 15),
     brute_max_queries: int = 10_000,
-    _cand_count: int | None = None,
 ) -> DataFrame:
     """Exact k nearest candidates per query.
 
@@ -457,9 +477,11 @@ def knn_join(
     (dist, neighbor_id).
 
     ``level="auto"`` routes between the two exact paths:
-      - <= brute_max_queries -> broadcast-brute BLAS pass (two jobs);
+      - <= brute_max_queries (and <= 4e9 query x candidate pairs) ->
+        broadcast-brute BLAS pass;
       - larger query sets -> per-query LEVEL assignment (below), then
-        the fixed two-round plan (knn_two_round) per level group.
+        ONE two-round plan (the knn_two_round body) in which every
+        query runs at its assigned level.
     An explicit int level skips the assignment and runs the two-round
     plan at that level directly (its brute tail covers queries whose
     window is too sparse at the chosen level, so the result is exact
@@ -475,93 +497,67 @@ def knn_join(
     """
     from .spatial_join import with_cell
 
-    if level == "auto":
-        # small query sets: exact broadcast-brute (two jobs); bounded
-        # by a pair-count budget so huge candidate sides still take
-        # the two-round cell plan. The query-side probe is a limit(),
-        # not a full count, and the candidate side is counted at most
-        # once — the count is reused below via _cand_count instead of
-        # re-scanning the candidate table.
-        if brute_max_queries:
-            n_q = queries.limit(brute_max_queries + 1).count()
-            if n_q <= brute_max_queries:
-                if _cand_count is None:
-                    _cand_count = candidates.count()
-                if n_q * _cand_count <= 4_000_000_000:
-                    return _knn_broadcast_brute(
-                        spark, queries, candidates, k, metric, query_id, cand_id,
-                        exclude_self,
-                    )
-        coarse, fine = auto_levels
-        levels = list(range(fine, coarse - 1, -3))  # fine -> coarse, step 3
-        if levels[-1] != coarse:
-            levels.append(coarse)
-        # per-cell candidate counts at the finest level, rolled up to the
-        # coarser levels NATIVELY (parent = Morton bit truncation)
-        counts = {
-            fine: with_cell(candidates.select("lat", "lon"), fine, out_col="cell")
-            .groupBy("cell")
-            .agg(F.count(F.lit(1)).alias("cnt"))
-        }
-        for lvl in levels[1:]:
-            prev = counts[fine]
-            parent = (
-                F.shiftleft(
-                    F.shiftrightunsigned(F.shiftrightunsigned(F.col("cell"), 5),
-                                         2 * (fine - lvl)),
-                    5,
-                )
-                + F.lit(lvl)
-            ).alias("cell")
-            counts[lvl] = prev.groupBy(parent).agg(F.sum("cnt").alias("cnt"))
-
-        # assign each query the DEEPEST level whose 3x3 window already
-        # holds >= 4k candidates (cheap windows), else the coarsest: the
-        # qualifying (query, level) pairs of all levels in one union,
-        # the max level per query. A lazy localCheckpoint materializes
-        # the assignment once (at the level-group collect below): the
-        # returned plan reads it in every level group's query side,
-        # after this function returns, and its blocks go when the plan
-        # does.
-        qpts = queries.select(F.col(query_id).alias("_qid"), "lat", "lon")
-        picked = None
-        min_cands = max(4 * k, 16)
-        for lvl in levels:
-            qc = with_cell(qpts, lvl, out_col="cell")
-            ring = _ring_cells_udf(lvl, 1)
-            win = (
-                qc.withColumn("cell", F.explode(ring(F.col("cell"))))
-                .join(counts[lvl], "cell", "left")
-                .groupBy("_qid")
-                .agg(F.sum(F.coalesce(F.col("cnt"), F.lit(0))).alias("_wc"))
-                .withColumn("_lvl", F.lit(lvl))
-            )
-            ok = win.filter(F.col("_wc") >= min_cands).select("_qid", "_lvl")
-            picked = ok if picked is None else picked.unionByName(ok)
-        assign = (
-            qpts.select("_qid")
-            .join(picked.groupBy("_qid").agg(F.max("_lvl").alias("_lvl")), "_qid", "left")
-            .fillna({"_lvl": levels[-1]})
-            .localCheckpoint(eager=False)
+    if level != "auto":
+        # explicit level: the same fixed two-round plan, no driver pacing
+        return knn_two_round(
+            spark, queries, candidates, k, int(level), metric,
+            query_id, cand_id, exclude_self,
         )
-        level_groups = [r["_lvl"] for r in assign.select("_lvl").distinct().collect()]
-        out = None
-        for lvl in level_groups:
-            ids = assign.filter(F.col("_lvl") == lvl).select(F.col("_qid").alias(query_id))
-            sub = queries.join(ids, query_id, "left_semi")
-            # large query sets (everything that did not take the brute
-            # gate above): the FIXED two-round plan — the per-query
-            # level assignment guarantees >= max(4k, 16) candidates in
-            # each 3x3 window, so the two-round tail stays empty
-            part = knn_two_round(
-                spark, sub, candidates, k, int(lvl), metric,
-                query_id, cand_id, exclude_self,
+    if brute_max_queries:
+        # small query sets: exact broadcast-brute, bounded by a
+        # pair-count budget so huge candidate sides still take the
+        # two-round cell plan. ONE limited collect both decides the
+        # route and supplies the brute pass its query rows.
+        q_rows = queries.select(query_id, "lat", "lon").limit(brute_max_queries + 1).collect()
+        if len(q_rows) <= brute_max_queries and len(q_rows) * candidates.count() <= 4_000_000_000:
+            return _knn_broadcast_brute(
+                spark, queries, q_rows, candidates, k, metric, query_id, cand_id,
+                exclude_self,
             )
-            out = part if out is None else out.unionByName(part)
-        return out
+    coarse, fine = auto_levels
+    levels = list(range(fine, coarse - 1, -3))  # fine -> coarse, step 3
+    if levels[-1] != coarse:
+        levels.append(coarse)
+    # per-cell candidate counts at the finest level, rolled up to the
+    # coarser levels NATIVELY (parent = Morton bit truncation)
+    counts = {
+        fine: with_cell(candidates.select("lat", "lon"), fine, out_col="cell")
+        .groupBy("cell")
+        .agg(F.count(F.lit(1)).alias("cnt"))
+    }
+    for lvl in levels[1:]:
+        counts[lvl] = counts[fine].groupBy(
+            C.parent_col(F.col("cell"), fine, lvl).alias("cell")
+        ).agg(F.sum("cnt").alias("cnt"))
 
-    # explicit level: the same fixed two-round plan, no driver pacing
-    return knn_two_round(
-        spark, queries, candidates, k, int(level), metric,
-        query_id, cand_id, exclude_self,
+    # assign each query the DEEPEST level whose 3x3 window already
+    # holds >= 4k candidates (cheap windows), else the coarsest: the
+    # qualifying (query, level) pairs of all levels in one union, the
+    # max level per query. localCheckpoint(eager=True) materializes the
+    # assignment here, once (under AQE even a lazy checkpoint runs most
+    # of its plan at the call): the two-round plan reads it at every
+    # query-side reference, which would otherwise recompute it each
+    # time, and its blocks go when the plan does.
+    qpts = queries.select(F.col(query_id).alias("query_id"), "lat", "lon")
+    picked = None
+    min_cands = max(4 * k, 16)
+    for lvl in levels:
+        win = (
+            with_cell(qpts, lvl, out_col="cell")
+            .withColumn("cell", F.explode(_ring_cells(F.col("cell"))))
+            .join(counts[lvl], "cell", "left")
+            .groupBy("query_id")
+            .agg(F.sum(F.coalesce(F.col("cnt"), F.lit(0))).alias("_wc"))
+            .withColumn("_lvl", F.lit(lvl))
+        )
+        ok = win.filter(F.col("_wc") >= min_cands).select("query_id", "_lvl")
+        picked = ok if picked is None else picked.unionByName(ok)
+    assign = (
+        qpts.join(picked.groupBy("query_id").agg(F.max("_lvl").alias("_lvl")),
+                  "query_id", "left")
+        .fillna({"_lvl": levels[-1]})
+        .localCheckpoint(eager=True)
+    )
+    return _two_round(
+        assign, candidates, k, levels, metric, "query_id", cand_id, exclude_self, 4096
     )

@@ -992,8 +992,9 @@ def clip_polygons_to_tiles(
     Plan: driver builds the (ring, tile) candidate rows (the pip_join
     list-of-Polygon convention — 10³-10⁵ polygons; use a rings
     DataFrame + per-polygon refine, the pip_join_rings pattern, beyond
-    that), rings broadcast once, ONE mapInPandas over candidates —
-    embarrassingly parallel, no shuffle.
+    that), rings ride in the task closure (PySpark broadcasts a large
+    command itself), ONE mapInPandas over candidates — embarrassingly
+    parallel, no shuffle.
     """
     import math
 
@@ -1018,7 +1019,6 @@ def clip_polygons_to_tiles(
     cand = spark.createDataFrame(
         rows, "poly_id string, ring_idx int, tile_x long, tile_y long"
     )
-    bc = spark.sparkContext.broadcast(rings_scaled)
     ext = int(extent)
 
     def _clip_half(xs, ys, axis, e, keep_ge):
@@ -1064,7 +1064,7 @@ def clip_polygons_to_tiles(
             for pid, ri, tx, ty in zip(
                 pdf["poly_id"], pdf["ring_idx"], pdf["tile_x"], pdf["tile_y"]
             ):
-                sx, sy = bc.value[(pid, int(ri))]
+                sx, sy = rings_scaled[(pid, int(ri))]
                 xs, ys = sx, sy
                 txf, tyf = float(tx), float(ty)
                 xs, ys = _clip_half(xs, ys, 0, txf, True)

@@ -93,3 +93,16 @@ def test_lon_wrap_neighbors():
     ring = cells.neighbors(c, ring=1)[0]
     lats_min, _, lon_min, lon_max = cells.cell_bounds(np.unique(ring))
     assert lon_max.max() > 179.0  # wrapped across the antimeridian
+
+
+def test_neighbors_of_mixed_levels_match_per_level_calls():
+    # each ring is built at its own cell's level, in input order
+    rng = np.random.default_rng(5)
+    lat, lon = rng.uniform(-90, 90, 40), rng.uniform(-180, 180, 40)
+    coarse = cells.cell_id(lat[:20], lon[:20], 6)
+    fine = cells.cell_id(lat[20:], lon[20:], 12)
+    mixed = np.concatenate([fine[:10], coarse, fine[10:]])
+    want = np.concatenate([
+        cells.neighbors(fine[:10]), cells.neighbors(coarse), cells.neighbors(fine[10:]),
+    ])
+    assert (cells.neighbors(mixed, ring=1) == want).all()

@@ -95,3 +95,47 @@ def test_two_round_window_overflow_falls_back(spark, corpus):
     cand_rows = [(r.doc_id, r.lat, r.lon) for r in corpus.collect()]
     q_rows = [(r.doc_id, r.lat, r.lon) for r in queries.collect()]
     assert got == sorted(knn_bruteforce(q_rows, cand_rows, k=4, metric="euclid2_deg"))
+
+
+def _assigned_levels(monkeypatch) -> list:
+    """Record the query frames (one ``_lvl`` per query) that
+    knn_join(level='auto') hands to the two-round body."""
+    from osm_pbf_spark.operators import knn
+
+    seen = []
+    body = knn._two_round
+    monkeypatch.setattr(knn, "_two_round", lambda q, *a: seen.append(q) or body(q, *a))
+    return seen
+
+
+@pytest.mark.parametrize("metric", ["euclid2_deg", "haversine"])
+def test_auto_one_plan_over_mixed_levels_exact_under_ties(spark, monkeypatch, metric):
+    """ONE two-round plan over queries at several cell levels: a dense
+    blob (fine level) and a sparse background (coarse level, mostly the
+    brute tail), each with stacks of identical points, so the k-th slot
+    is a (dist, neighbor_id) tie on both sides of the level split."""
+    rng = np.random.default_rng(29)
+    pts = []
+    for s in range(10):  # stacks: 5 in the blob, 5 in the background
+        if s < 5:
+            la, lo = 40.7 + rng.uniform(-0.02, 0.02), -74.0 + rng.uniform(-0.02, 0.02)
+        else:
+            la, lo = rng.uniform(-60, 60), rng.uniform(-170, 170)
+        pts += [(f"s{s}_{j}", float(la), float(lo)) for j in range(6)]
+    for i in range(240):
+        pts.append((f"b{i:03d}", 40.7 + float(rng.uniform(-0.02, 0.02)),
+                    -74.0 + float(rng.uniform(-0.02, 0.02))))
+    for i in range(200):
+        pts.append((f"r{i:03d}", float(rng.uniform(-60, 60)), float(rng.uniform(-170, 170))))
+    df = spark.createDataFrame(pts, "doc_id string, lat double, lon double")
+    seen = _assigned_levels(monkeypatch)
+    got = sorted(
+        (r.query_id, r.neighbor_id, r.rank)
+        for r in knn_join(
+            spark, df, df, k=5, level="auto", metric=metric, auto_levels=(6, 12),
+            brute_max_queries=0,
+        ).collect()
+    )
+    assert len(seen) == 1
+    assert seen[0].select("_lvl").distinct().count() >= 2
+    assert got == sorted(knn_bruteforce(pts, pts, k=5, metric=metric))

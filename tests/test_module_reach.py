@@ -1,5 +1,5 @@
 """Every package module must be reached by an import walk from the
-entry points (jobs, perfbench, bench.py and the driver registry). A
+entry points (jobs, perfbench and the driver registry). A
 module nothing imports fails here; narrowing ROOTS then shows what a
 deletion slice may remove. Spark-free: the walk only parses sources."""
 
@@ -10,7 +10,7 @@ import glob
 import os
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-ROOTS = ["jobs/*.py", "perfbench/*.py", "bench.py", "__spark_entry__.py"]
+ROOTS = ["jobs/*.py", "perfbench/*.py", "__spark_entry__.py"]
 
 
 def _name(path: str) -> str:

@@ -176,6 +176,39 @@ def test_knn_two_round_never_broadcasts(spark):
     assert "BroadcastNestedLoopJoin" not in plan, plan
 
 
+def test_knn_auto_plans_one_two_round_body(spark, monkeypatch):
+    """level='auto' over queries assigned to several cell levels plans
+    the two-round body ONCE: as many ball-window UDF nodes as a
+    single-level knn_two_round plan (one plan per level group would
+    repeat them per group), and no broadcast join anywhere."""
+    from osm_pbf_spark.operators import knn
+    from tests.test_knn_tworound import _assigned_levels
+
+    rng = np.random.default_rng(17)
+    n = 600
+    lat = rng.uniform(-60, 60, n)
+    lon = rng.uniform(-170, 170, n)
+    # hot cell: half the points inside 0.2 deg -> fine level there,
+    # coarse level elsewhere
+    lat[: n // 2] = 52.5 + rng.uniform(-0.1, 0.1, n // 2)
+    lon[: n // 2] = 13.4 + rng.uniform(-0.1, 0.1, n // 2)
+    df = spark.createDataFrame(
+        [(f"d{i}", float(lat[i]), float(lon[i])) for i in range(n)],
+        "doc_id string, lat double, lon double",
+    )
+    seen = _assigned_levels(monkeypatch)
+    plan = _plan(knn.knn_join(spark, df, df, k=4, level="auto", auto_levels=(6, 12),
+                              brute_max_queries=0))
+    assert len(seen) == 1
+    assert seen[0].select("_lvl").distinct().count() >= 2
+    assert "BroadcastHashJoin" not in plan, plan
+    assert "BroadcastNestedLoopJoin" not in plan, plan
+    single = _plan(knn.knn_two_round(spark, df, df, k=4, level=12))
+    n_w = single.count("ArrowEvalPython [_w(")
+    assert n_w >= 1
+    assert plan.count("ArrowEvalPython [_w(") == n_w, plan
+
+
 def test_bucketed_join_needs_no_exchange(spark, tmp_path):
     """Bucketing is THE repeated-large-join scale tool: two tables
     bucketed on the join key by the same bucket count co-locate, so the
