@@ -36,6 +36,7 @@ from pyspark.sql import types as T
 from ..functions import cells as C
 from ..functions.geometry import EARTH_RADIUS_M, haversine_m
 
+
 @F.pandas_udf(T.ArrayType(T.LongType()))
 def _ring_cells(cell: pd.Series) -> pd.Series:
     """3x3 cell window of each cell, at the cell's own level."""
